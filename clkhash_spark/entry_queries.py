@@ -1497,8 +1497,7 @@ def q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-bucket pairs with cos >= 0.20 decided in integer arithmetic
     (10000·dot² >= 400·|a|²·|b|², decimal(38)/HUGEINT) so no float
     rounding can flip a boundary pair between engines. Completes the
-    dedup family's oracle coverage: the float-cosine
-    `embedding_near_duplicates` runs the identical bucket-join plan."""
+    dedup family's oracle coverage."""
     emb = _read(spark, sf_dir, "embeddings")
     out = similarity.embedding_near_duplicates_exact(
         emb, threshold_pct=NEAR_DUP_THRESHOLD_PCT,

@@ -69,8 +69,9 @@ def dice_similarity(
 
     ``2 * popcount(a & b) / (pc_a + pc_b)`` — the bitwise AND runs over
     the hex representation per byte. For bulk scoring use
-    :func:`clkhash_spark.operators.scoring.dice_scores` (Arrow-batched,
-    ~10x faster); this column form is for ad-hoc SQL.
+    :func:`clkhash_spark.operators.scoring.score_candidates` (one
+    Arrow-batched pass that scores and thresholds, ~10x faster); this
+    column form is for ad-hoc SQL.
     """
     a = _bytes_to_array(clk_a)
     b = _bytes_to_array(clk_b)

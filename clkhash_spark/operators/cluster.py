@@ -105,17 +105,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _checksum(edges: DataFrame) -> Tuple[int, int]:
-    row = edges.agg(
-        F.count("*").alias("n"),
-        # mod 2^31 per row so the sum can never overflow a long
-        F.coalesce(
-            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 31))), F.lit(0)
-        ).alias("h"),
-    ).first()
-    return row["n"], row["h"]
-
-
 def _union_find_labels(u, v) -> "object":
     """Driver-side connected components over a bounded edge list —
     fully vectorized (Shiloach–Vishkin-style hooking + pointer
@@ -243,7 +232,8 @@ def connected_components(
         )
 
     if (
-        known_edge_bound is not None
+        small_graph_edges > 0
+        and known_edge_bound is not None
         and 0 <= known_edge_bound <= small_graph_edges
         and id_assignment != "dense"
     ):

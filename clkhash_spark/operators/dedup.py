@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import hashlib
 import re
-from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -39,7 +38,6 @@ __all__ = [
     "minhash_candidates",
     "minhash_near_duplicates",
     "simhash",
-    "simhash_candidates",
     "shingle_jaccard",
 ]
 
@@ -90,14 +88,6 @@ def word_shingles(text: Column, shingle_size: int = 3) -> Column:
             lambda i: F.array_join(F.slice(words, i, shingle_size), " "),
         ),
     ).otherwise(F.array(F.array_join(words, " ")))
-
-
-def _md5_hash64(value: Column, salt: Column) -> Column:
-    """Deterministic 60-bit integer hash via md5 — reproducible in any
-    engine with md5 + hex parsing (the SQL-oracle contract)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(salt, F.lit(":"), value)), 1, 15), 16, 10
-    ).cast("long")
 
 
 # The affine maps live in GF(p) with p = 2^31 - 1 (Mersenne prime):
@@ -419,57 +409,6 @@ def simhash(
     narrow = widen_if_narrow(df.select(key_col, text_col))
     return narrow.select(
         F.col(key_col), simhash_udf(F.col(text_col)).alias("simhash")
-    )
-
-
-def simhash_candidates(
-    fingerprints: DataFrame, key_col: str = "doc_id"
-) -> DataFrame:
-    """Candidate pairs whose SimHashes agree on ≥1 of four 15-bit chunks
-    (pigeonhole: hamming distance ≤ 3 guarantees a chunk match)."""
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk_id"),
-                F.shiftright(F.col("simhash"), c * 15)
-                .bitwiseAND(F.lit((1 << 15) - 1))
-                .alias("chunk"),
-            )
-            for c in range(4)
-        ]
-    )
-    exploded = fingerprints.select(
-        F.col(key_col), F.col("simhash"), F.explode(chunks).alias("c")
-    ).select(
-        key_col, "simhash",
-        # int64 key: chunk_id in bits 16+, 15-bit chunk value below —
-        # longs shuffle far cheaper than formatted strings.
-        (
-            F.shiftleft(F.col("c.chunk_id").cast("long"), 16)
-            + F.col("c.chunk")
-        ).alias("chunk_key"),
-    )
-    left = exploded.select(
-        "chunk_key",
-        F.col(key_col).alias("doc_a"), F.col("simhash").alias("sim_a"),
-    )
-    right = exploded.select(
-        "chunk_key",
-        F.col(key_col).alias("doc_b"), F.col("simhash").alias("sim_b"),
-    )
-    pairs = (
-        left.join(right, on="chunk_key")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sim_a", "sim_b")
-        .distinct()
-    )
-    # Hamming distance via popcount of XOR (bit_count is JVM-side).
-    return pairs.select(
-        "doc_a",
-        "doc_b",
-        F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias(
-            "hamming"
-        ),
     )
 
 

@@ -28,18 +28,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, LongType
+from pyspark.sql.types import IntegerType, LongType
 from pyspark.sql.window import Window
 
 __all__ = [
     "quantized_dot",
     "batched_quantized_dot",
     "cosine",
-    "batched_cosine",
     "brute_force_topk",
     "hyperplane_signatures",
     "lsh_topk",
-    "embedding_near_duplicates",
     "embedding_near_duplicates_exact",
     "kmeans_centroids",
     "ivf_assign",
@@ -118,25 +116,6 @@ def batched_quantized_dot(a: Column, b: Column) -> Column:
         return pd.Series((qa * qb).sum(axis=1))
 
     return qdot(a, b)
-
-
-def batched_cosine(a: Column, b: Column) -> Column:
-    """Arrow-batched cosine similarity (double) — the hot-path twin of
-    :func:`cosine` (float64 summation order differs from the Catalyst
-    fold by < 1e-12 on unit-scale vectors; consumers round anyway)."""
-
-    @F.pandas_udf(DoubleType())
-    def cos(av: pd.Series, bv: pd.Series) -> pd.Series:
-        if len(av) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        ma = np.array(list(av), dtype=np.float64)
-        mb = np.array(list(bv), dtype=np.float64)
-        dots = (ma * mb).sum(axis=1)
-        norms = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(np.where(norms > 0, dots / norms, 0.0))
-
-    return cos(a, b)
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -1357,17 +1336,16 @@ def embedding_near_duplicates_exact(
     key_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Near-duplicate pairs with an ENGINE-EXACT threshold test — the
-    oracle-checkable twin of :func:`embedding_near_duplicates`.
+    """Near-duplicate pairs with an ENGINE-EXACT threshold test.
 
     ``cos(a,b) >= t`` (``t = threshold_pct / 100``) is evaluated
     entirely in integer arithmetic on the quantized vectors:
     ``dot > 0  AND  10000·dot² >= threshold_pct²·|a|²·|b|²`` — both
     sides exact integers (decimal(38,0) in Spark, HUGEINT in DuckDB),
     so no float rounding can flip a boundary pair between engines.
-    Plan shape matches the float operator: one Arrow matmul for
-    signatures, norms computed once per VECTOR before the bucket
-    self-join (not per pair), skinny (vec_a, vec_b, dot_q) output.
+    Plan shape: one Arrow matmul for signatures, norms computed once
+    per VECTOR before the bucket self-join (not per pair), skinny
+    (vec_a, vec_b, dot_q) output.
     """
     with_norm = hyperplane_signatures(
         vectors, num_planes, seed, dim, key_col, vec_col
@@ -1402,41 +1380,3 @@ def embedding_near_duplicates_exact(
         * F.col("_na").cast(dec) * F.col("_nb").cast(dec)
     )
     return scored.where(keep).select("vec_a", "vec_b", "dot_q")
-
-
-def embedding_near_duplicates(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    num_planes: int = 16,
-    seed: int = 42,
-    dim: int = 64,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Near-duplicate vector pairs: bucket by hyperplane signature, then
-    verify candidates with true cosine ≥ threshold."""
-    buckets = hyperplane_signatures(
-        vectors, num_planes, seed, dim, key_col, vec_col
-    )
-    left = buckets.select(
-        "bucket", F.col(key_col).alias("vec_a"),
-        F.col(vec_col).alias("emb_a"),
-    )
-    right = buckets.select(
-        "bucket", F.col(key_col).alias("vec_b"),
-        F.col(vec_col).alias("emb_b"),
-    )
-    pairs = left.join(right, on="bucket").where(
-        F.col("vec_a") < F.col("vec_b")
-    )
-    return (
-        pairs.select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                batched_cosine(F.col("emb_a"), F.col("emb_b")), 6
-            ).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-        .distinct()
-    )

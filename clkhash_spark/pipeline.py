@@ -13,16 +13,18 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Any, Dict, Optional, Sequence, Union
+from functools import reduce
+from typing import Any, Dict, List, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .core.schema import Schema
-from .operators.blocking import block_keys, block_size_histogram, cap_block_size
+from .operators.blocking import block_keys, cap_block_size
 from .operators.cluster import attach_cluster_ids, connected_components
 from .operators.encode import encode_clks
-from .operators.scoring import candidate_pairs, score_candidates
+from .operators.scoring import (candidate_pairs, one_to_one_matching,
+                                score_candidates)
 
 __all__ = ["LinkageConfig", "LinkageResult", "StageStore",
            "estimate_bit_agreement", "run_linkage",
@@ -209,7 +211,6 @@ class LinkageConfig:
     max_block_size: Optional[int] = 2000
     block_cap_mode: str = "split"
     validate: bool = False
-    pair_partitions: Optional[int] = None
     checkpoint_dir: Optional[str] = None
     resume: bool = True
     # 'hash': int64 keys via xxhash64 (deterministic; collisions
@@ -218,9 +219,6 @@ class LinkageConfig:
     # birthday-collision risk (cluster-id values then vary run-to-run;
     # membership does not).
     key_id_mode: str = "hash"
-    # Record the log2 block-size histogram (the skew observable) in
-    # metrics — one extra aggregate over the banded rows.
-    block_histogram: bool = False
     # Matched-pair graphs at or below this edge count are clustered
     # driver-side (Arrow transfer, 16 B/edge → ≤64 MB at the default;
     # vectorized hook+jump labelling) instead of O(log n) rounds of
@@ -322,8 +320,7 @@ def _banded_partitions(spark: SparkSession, banded_rows: int) -> int:
     shuffle-partitions conf: at 2M input rows x 64 bands on local[2]
     the static 8 partitions put 16M rows (~256 MB+) in each and the
     blocks stage spent its time spilling. Floor at the session conf
-    (never fewer partitions than plain shuffles use), cap at 65536
-    (10^12-row inputs run with explicit pair_partitions anyway)."""
+    (never fewer partitions than plain shuffles use), cap at 65536."""
     by_volume = (banded_rows + _BANDED_ROWS_PER_PARTITION - 1) // (
         _BANDED_ROWS_PER_PARTITION
     )
@@ -506,8 +503,12 @@ def _resolve_banding(
 
 
 class _StageRunner:
-    """Checkpoint-or-persist stage execution shared by the one- and
-    two-party pipelines."""
+    """Checkpoint-or-persist stage execution for the linkage graph.
+
+    A stage's ``build`` returns ``(df, persisted)``. ``persisted=True``
+    says the stage cached ``df`` itself because downstream plans rely on
+    its physical partitioning: the runner then only counts it, never
+    ``localCheckpoint``s it."""
 
     def __init__(
         self,
@@ -553,7 +554,7 @@ class _StageRunner:
     def _run_stage(
         self, name: str, fp: str, build, parents, start: float
     ) -> DataFrame:
-        df = build()
+        df, persisted = build()
         if self.store is not None:
             df = self.store.write(name, df, fp)
             entry = self.store.manifest["stages"][name]
@@ -583,12 +584,10 @@ class _StageRunner:
             # those trees measured ~10 s of driver-only gaps per 100k-
             # row pipeline run (event-log evidence, OPTIMIZATION_r06.md
             # — e.g. a 5.2 s zero-task gap before the first clusters
-            # job). Physical partitioning survives (LogicalRDD carries
-            # outputPartitioning), so the blocks stage's single-
-            # exchange contract still holds. On a real cluster, prefer
-            # reliable snapshots via checkpoint_dir (the StageStore
-            # path, which truncates the same way through parquet).
-            if not getattr(df, "_clkhash_prematerialized", False):
+            # job). On a real cluster, prefer reliable snapshots via
+            # checkpoint_dir (the StageStore path, which truncates the
+            # same way through parquet).
+            if not persisted:
                 df = df.localCheckpoint(eager=False)
             rows = df.count()
             elapsed = time.time() - start
@@ -600,42 +599,91 @@ class _StageRunner:
         return df
 
 
-def run_linkage(
-    spark: SparkSession,
-    pages: DataFrame,
-    config: LinkageConfig,
-) -> LinkageResult:
-    """Run the full dedup-linkage pipeline over one table.
+# The pipeline's int64 record id ("kid"). Party B's kids carry the sign
+# bit (A ≥ 0, B < 0), so cross-party pair selection is a free sign
+# predicate on the unioned blocks.
+_KID = "_kid"
+_PARTY_B_TAG = -(1 << 63)
 
-    Stages (each checkpointed when ``config.checkpoint_dir`` is set):
-    ``clks`` → ``blocks`` → ``pairs`` → ``clusters``.
+
+def _candidate_pairs(
+    blocks: DataFrame, two_party: bool, min_band_matches: int
+) -> DataFrame:
+    """The graph's pair predicate over the blocks stage: ``key_a <
+    key_b`` within one party, A (kid ≥ 0) against B (kid < 0) across
+    two. ``blocks`` is hash-partitioned by block_key (the blocks stage's
+    single exchange), so both join sides reuse it and no repartition is
+    asked for here."""
+    if two_party:
+        return candidate_pairs(
+            blocks.where(F.col(_KID) >= 0),
+            other=blocks.where(F.col(_KID) < 0),
+            key_col=_KID, min_band_matches=min_band_matches,
+        )
+    return candidate_pairs(
+        blocks, key_col=_KID, min_band_matches=min_band_matches
+    )
+
+
+def _link(
+    spark: SparkSession,
+    parties: Sequence[DataFrame],
+    config: LinkageConfig,
+    one_to_one: bool,
+) -> LinkageResult:
+    """The linkage stage graph over one party (dedup) or two (A → B).
+
+    Side A is ``parties[0]`` and side B is ``parties[-1]``; with one
+    party both are the same DataFrame and the pair join is a self-join.
+    Stages ``clks`` (``clks_a``/``clks_b``), ``kids`` (dense ids only,
+    ``kids_a``/``kids_b``), ``blocks``, ``pairs`` and ``clusters`` are
+    each checkpointed when ``config.checkpoint_dir`` is set, and resumed
+    when their fingerprint matches. ``one_to_one`` applies only to two
+    parties.
     """
+    two_party = len(parties) == 2
+    sides = ("_a", "_b") if two_party else ("",)
+    clk_stages = tuple(f"clks{side}" for side in sides)
+    key = config.key_col
     metrics: Dict[str, Any] = {}
     runner = _StageRunner(spark, config, metrics)
-    input_fp = config.input_fingerprint or _input_fingerprint(pages)
+    input_fps = [
+        config.input_fingerprint or _input_fingerprint(p) for p in parties
+    ]
+    blocks_fp = "+".join(input_fps)
+    pairs_fp = (
+        f"{blocks_fp}|one_to_one={one_to_one}" if two_party else blocks_fp
+    )
 
-    clks = runner.run(
-        "clks",
-        _fingerprint(config, "clks", input_fp),
-        lambda: encode_clks(
-            pages,
+    def encode(df: DataFrame):
+        return lambda: (encode_clks(
+            df,
             config.schema,
             config.secret,
-            key_cols=(config.key_col,),
+            key_cols=(key,),
             feature_cols=config.feature_cols,
             validate=config.validate,
-        ),
-    )
+        ), False)
+
+    clks = [
+        runner.run(stage, _fingerprint(config, stage, fp), encode(df))
+        for stage, fp, df in zip(clk_stages, input_fps, parties)
+    ]
 
     # Band geometry must scale with n (candidate volume grows n²,
     # true pairs n) — resolve auto settings from the materialized count
     # AND the measured unrelated-pair bit agreement (the leakage base of
     # the law; assuming it costs an order of magnitude in join volume —
     # see estimate_bit_agreement).
-    n_rows = metrics.get("clks_rows") or clks.count()
+    n_rows = sum(
+        metrics.get(f"{stage}_rows") or df.count()
+        for stage, df in zip(clk_stages, clks)
+    )
     measured_a = None
     if config.num_bands is None or config.bits_per_band is None:
-        measured_a = estimate_bit_agreement(clks, key_col=config.key_col)
+        measured_a = estimate_bit_agreement(
+            reduce(DataFrame.unionByName, clks), key_col=key
+        )
     config = _resolve_banding(config, n_rows, measured_a)
     metrics["banding"] = {
         "num_bands": config.num_bands,
@@ -646,153 +694,160 @@ def run_linkage(
     }
 
     # Work in an int64 key domain through the shuffle-heavy middle
-    # stages: banding, the pair self-join, and the CLK payload joins all
-    # move (long, long) rows instead of (long, url-string) — ~2.5x less
-    # shuffle volume. URL strings rejoin only on the skinny final pairs.
-    # key_id_mode='hash' (xxhash64) is deterministic and collision-safe
+    # stages: banding, the pair join, and the CLK payload joins all
+    # move (long, long) rows instead of (long, key-string) — ~2.5x less
+    # shuffle volume. Keys rejoin only on the skinny final pairs.
+    # key_id_mode='hash' (xxhash64; 63 bits with two parties, leaving
+    # the sign bit to the party tag) is deterministic and collision-safe
     # below ~10^9 rows; 'dense' assigns unique per-run ids instead for
-    # the 10^12-row regime.
-    kid_col = "_kid"
-    if config.key_id_mode == "dense":
+    # the 10^12-row regime. The kid values feed the split cap's
+    # sub-block hash, so they are part of the output contract.
+    def with_kids(i: int, clks_i: DataFrame):
+        if config.key_id_mode == "dense":
+            kid = F.monotonically_increasing_id()
+        else:
+            kid = F.xxhash64(F.col(key))
+            if two_party:
+                kid = F.shiftrightunsigned(kid, 1)
+        if i == 1:
+            kid = kid.bitwiseOR(F.lit(_PARTY_B_TAG))
+        if config.key_id_mode != "dense":
+            clks_k = clks_i.withColumn(_KID, kid)
+            return clks_k, clks_k.select(_KID, key)
         # Dense ids come from monotonically_increasing_id, which is
         # PER-RUN (partition-layout dependent) — so the key↔id map is
         # itself a checkpointed stage: a resumed 'blocks'/'pairs' table
         # stores _kid values and would silently join wrong against a
         # fresh assignment. Reading the map back from the store (or
-        # pinning it via persist+count when there is no store) keeps
-        # every _kid consumer on ONE assignment.
-        def build_kids() -> DataFrame:
-            return clks.select(config.key_col).withColumn(
-                kid_col, F.monotonically_increasing_id()
-            )
-
+        # pinning it via localCheckpoint+count when there is no store)
+        # keeps every _kid consumer on ONE assignment.
+        stage = f"kids{sides[i]}"
         kids = runner.run(
-            "kids", _fingerprint(config, "kids", input_fp), build_kids,
-            parents=("clks",),
+            stage, _fingerprint(config, stage, input_fps[i]),
+            lambda: (clks_i.select(key).withColumn(_KID, kid), False),
+            parents=(clk_stages[i],),
         )
-        clks_k = clks.join(kids, on=config.key_col).persist()
-        ids = kids.select(kid_col, config.key_col)
-    else:
-        clks_k = clks.withColumn(kid_col, F.xxhash64(F.col(config.key_col)))
-        ids = clks_k.select(kid_col, config.key_col)
+        return clks_i.join(kids, on=key).persist(), kids.select(_KID, key)
 
-    def build_blocks() -> DataFrame:
-        blocks = block_keys(
-            clks_k,
-            l=config.schema.l,
-            num_bands=config.num_bands,
-            bits_per_band=config.bits_per_band,
-            seed=config.lsh_seed,
-            salt=config.lsh_salt,
-            key_cols=(kid_col,),
-        )
+    clks_k, ids = zip(*(with_kids(i, df) for i, df in enumerate(clks)))
+
+    def build_blocks():
+        banded = reduce(DataFrame.unionByName, [
+            block_keys(
+                df,
+                l=config.schema.l,
+                num_bands=config.num_bands,
+                bits_per_band=config.bits_per_band,
+                seed=config.lsh_seed,
+                salt=config.lsh_salt,
+                key_cols=(_KID,),
+            )
+            for df in clks_k
+        ])
         # ONE explicit shuffle by block_key, materialized ONCE: the
-        # cap's size aggregate, the histogram, and BOTH sides of the
-        # pair self-join all require hashpartitioning(block_key) —
-        # deriving them from this exchange makes every one of them
-        # exchange-free. Counters at 600k rows: the banded rows (37M
-        # skinny rows, ~320 MB) previously re-shuffled 3x (size groupBy
-        # + two join inputs = ~75M of the pairs stage's 85M shuffled
-        # records); now once. persist, NOT localCheckpoint, for THIS
-        # stage: under AQE a checkpoint's LogicalRDD loses the plan's
-        # outputPartitioning (the adaptive plan's final partitioning is
-        # unknown pre-execution), which silently re-inserted the very
-        # exchanges this stage exists to eliminate — measured at 4M
-        # two-party rows: a 285.6M-row size-aggregate exchange plus
-        # 2×192M-row pair-join-side exchanges (event log, round-6 4M
-        # ladder). Cached plans keep their partitioning (AQE leaves
-        # cached-plan output partitioning unchanged by default), and
-        # the logical tree above the checkpointed clks stage is tiny,
-        # so the lineage-truncation motivation doesn't apply here. The
-        # cap's size aggregate (its first action) materializes the
-        # cache; the runner then skips a second materialization.
-        blocks = blocks.repartition(
-            config.pair_partitions
-            or _banded_partitions(spark, n_rows * config.num_bands),
+        # cap's size aggregate and BOTH sides of the pair join all
+        # require hashpartitioning(block_key) — deriving them from this
+        # exchange makes every one of them exchange-free. Counters at
+        # 600k rows: the banded rows (37M skinny rows, ~320 MB)
+        # previously re-shuffled 3x (size groupBy + two join inputs =
+        # ~75M of the pairs stage's 85M shuffled records); now once.
+        # With two parties the skew cap sees both parties' contribution
+        # to a hot block at once (a boilerplate mega-block is a JOINT
+        # phenomenon — capping per party would under-count its s_a × s_b
+        # pair volume).
+        #
+        # persist, NOT localCheckpoint, on both cap paths: under AQE a
+        # checkpoint's LogicalRDD loses the plan's outputPartitioning,
+        # which silently re-inserted the very exchanges this stage
+        # exists to eliminate — measured at 4M two-party rows: a
+        # 285.6M-row size-aggregate exchange plus 2×192M-row
+        # pair-join-side exchanges (event log, round-6 4M ladder).
+        # Cached plans keep their partitioning. When the cap fires in
+        # 'drop' mode the capped rows are a filter of this exchange and
+        # the pair join stays exchange-free; 'split' mode rewrites
+        # block_key for the oversized blocks, so the join re-shuffles
+        # both sides — inherent to re-keying, not a lost partitioning.
+        blocks = banded.repartition(
+            _banded_partitions(spark, n_rows * config.num_bands),
             "block_key",
         ).persist()
-        capped = blocks
         if config.max_block_size:
             capped, accounting = cap_block_size(
                 blocks,
                 config.max_block_size,
                 mode=config.block_cap_mode,
-                key_cols=(kid_col,),
+                key_cols=(_KID,),
             )
-            metrics["block_cap_accounting"] = (
-                accounting.first().asDict()
-            )
-        if config.block_histogram:
-            metrics["block_size_histogram"] = {
-                int(r["log2_size"]): int(r["num_blocks"])
-                for r in block_size_histogram(capped).collect()
-            }
-        if capped is blocks:
-            # Unchanged by the cap: already checkpoint-materialized.
-            capped._clkhash_prematerialized = True
-        return capped
+            metrics["block_cap_accounting"] = accounting.first().asDict()
+            if capped is not blocks:
+                blocks = capped.persist()
+        return blocks, True
 
     blocks = runner.run(
-        "blocks", _fingerprint(config, "blocks", input_fp), build_blocks,
-        parents=("clks",),
+        "blocks", _fingerprint(config, "blocks", blocks_fp), build_blocks,
+        parents=clk_stages,
     )
     if metrics.get("blocks_resumed"):
         # Parquet read-back loses the blocks stage's
         # hashpartitioning(block_key) — restore it so a resumed run
-        # keeps the same single-exchange pairs plan as a fresh one.
+        # keeps the same pairs plan as a fresh one.
         blocks = blocks.repartition(
-            config.pair_partitions
-            or _banded_partitions(spark, n_rows * config.num_bands),
+            _banded_partitions(spark, n_rows * config.num_bands),
             "block_key",
         ).persist()
 
-    def build_pairs() -> DataFrame:
+    scratch: List[DataFrame] = []
+
+    def build_pairs():
         scored = score_candidates(
-            candidate_pairs(
-                blocks,
-                key_col=kid_col,
-                # blocks is hash-partitioned by block_key (the blocks
-                # stage's single exchange, restored above on resume),
-                # so both self-join sides reuse it; a repartition here
-                # would add the shuffle back. Caveat: when the skew cap
-                # SPLITS a mega-block it rewrites block_key for those
-                # rows, and Catalyst conservatively re-inserts an
-                # exchange for the join — correct, just not
-                # single-exchange on that (rare, capped) path.
-                repartition=None,
-                min_band_matches=config.min_band_matches,
-            ),
-            clks_k,
+            _candidate_pairs(blocks, two_party, config.min_band_matches),
+            clks_k[0],
             threshold=config.threshold,
-            key_col=kid_col,
+            other_clks=clks_k[-1],
+            key_col=_KID,
         )
-        # Back to user-facing keys for the stage table / consumers.
-        id_a = ids.select(
-            F.col(kid_col).alias("key_a"),
-            F.col(config.key_col).alias("_url_a"),
+        # Back to user-facing keys, BEFORE 1-1 matching: its mutual-best
+        # tie-break orders by key, which must stay the key ordering.
+        scored = scored.join(
+            ids[0].select(F.col(_KID).alias("key_a"),
+                          F.col(key).alias("_url_a")),
+            on="key_a",
+        ).join(
+            ids[-1].select(F.col(_KID).alias("key_b"),
+                           F.col(key).alias("_url_b")),
+            on="key_b",
         )
-        id_b = ids.select(
-            F.col(kid_col).alias("key_b"),
-            F.col(config.key_col).alias("_url_b"),
-        )
-        # Pairs were canonicalized in the kid domain; re-canonicalize on
-        # the user-facing keys (string order != hash order).
-        return (
-            scored.join(id_a, on="key_a")
-            .join(id_b, on="key_b")
-            .select(
+        if not two_party:
+            # Pairs were canonicalized in the kid domain; re-canonicalize
+            # on the user-facing keys (string order != hash order).
+            return scored.select(
                 F.least("_url_a", "_url_b").alias("key_a"),
                 F.greatest("_url_a", "_url_b").alias("key_b"),
                 "score",
-            )
+            ), False
+        # Orientation is fixed: key_a from A, key_b from B.
+        scored = scored.select(
+            F.col("_url_a").alias("key_a"),
+            F.col("_url_b").alias("key_b"),
+            "score",
         )
+        if not one_to_one:
+            return scored, False
+        # Scratch cache for the mutual-best windows (two consumers);
+        # released once the stage output is materialized.
+        scored = scored.persist()
+        scratch.append(scored)
+        scored.count()
+        return one_to_one_matching(scored), False
 
     pairs = runner.run(
-        "pairs", _fingerprint(config, "pairs", input_fp), build_pairs,
-        parents=("clks", "blocks"),
+        "pairs", _fingerprint(config, "pairs", pairs_fp), build_pairs,
+        parents=(*clk_stages, "blocks"),
     )
+    for df in scratch:
+        df.unpersist()
 
-    def build_clusters() -> DataFrame:
+    def build_clusters():
         components = connected_components(
             pairs, id_assignment=config.key_id_mode,
             small_graph_edges=config.cluster_driver_gate_edges,
@@ -802,19 +857,38 @@ def run_linkage(
             known_edge_bound=metrics.get("pairs_rows"),
         )
         return attach_cluster_ids(
-            clks.select(config.key_col), components,
-            key_col=config.key_col, id_assignment=config.key_id_mode,
-        )
+            reduce(DataFrame.union, [df.select(key) for df in clks]),
+            components, key_col=key, id_assignment=config.key_id_mode,
+        ), False
 
     clusters = runner.run(
-        "clusters", _fingerprint(config, "clusters", input_fp),
+        "clusters", _fingerprint(config, "clusters", pairs_fp),
         build_clusters, parents=("pairs",),
     )
 
     return LinkageResult(
-        clks=clks, blocks=blocks, pairs=pairs, clusters=clusters,
-        metrics=metrics, config=config,
+        clks=reduce(DataFrame.unionByName, clks),
+        blocks=blocks,  # kid domain, capped (party = kid sign bit)
+        pairs=pairs,
+        clusters=clusters,
+        metrics=metrics,
+        config=config,
     )
+
+
+def run_linkage(
+    spark: SparkSession,
+    pages: DataFrame,
+    config: LinkageConfig,
+) -> LinkageResult:
+    """Run the full dedup-linkage pipeline over one table.
+
+    Stages (each checkpointed when ``config.checkpoint_dir`` is set):
+    ``clks`` → ``blocks`` → ``pairs`` → ``clusters`` (plus ``kids``
+    under ``key_id_mode='dense'``). Pairs are unordered, canonicalized
+    as ``key_a < key_b``.
+    """
+    return _link(spark, [pages], config, one_to_one=False)
 
 
 def run_linkage_two_party(
@@ -833,232 +907,10 @@ def run_linkage_two_party(
     (key_a from party_a, key_b from party_b, score); ``clusters`` holds
     the matched-pair components (useful when one_to_one=False).
 
-    Stage checkpointing/metrics mirror :func:`run_linkage`: stages
-    ``clks_a`` / ``clks_b`` / ``blocks`` / ``pairs`` / ``clusters``
-    (plus ``kids_a``/``kids_b`` under ``key_id_mode='dense'``) resume
-    from ``config.checkpoint_dir`` when fingerprints match. Banding,
-    skew capping (``max_block_size``), and the pair join all run in the
-    same int64 ``_kid`` domain as the single-table pipeline, with the
-    party carried in the kid's sign bit.
+    The same stage graph as :func:`run_linkage`, over two parties:
+    stages ``clks_a`` / ``clks_b`` / ``blocks`` / ``pairs`` /
+    ``clusters`` (plus ``kids_a``/``kids_b`` under
+    ``key_id_mode='dense'``), with the party carried in the kid's sign
+    bit and the pair join restricted to A × B.
     """
-    from .operators.scoring import one_to_one_matching
-
-    metrics: Dict[str, Any] = {}
-    runner = _StageRunner(spark, config, metrics)
-    fp_a = config.input_fingerprint or _input_fingerprint(party_a)
-    fp_b = config.input_fingerprint or _input_fingerprint(party_b)
-    fp_ab = f"{fp_a}+{fp_b}"
-
-    def encode(df: DataFrame):
-        return lambda: encode_clks(
-            df,
-            config.schema,
-            config.secret,
-            key_cols=(config.key_col,),
-            feature_cols=config.feature_cols,
-            validate=config.validate,
-        )
-
-    clks_a = runner.run(
-        "clks_a", _fingerprint(config, "clks_a", fp_a), encode(party_a)
-    )
-    clks_b = runner.run(
-        "clks_b", _fingerprint(config, "clks_b", fp_b), encode(party_b)
-    )
-
-    n_rows = (metrics.get("clks_a_rows") or clks_a.count()) + (
-        metrics.get("clks_b_rows") or clks_b.count()
-    )
-    measured_a = None
-    if config.num_bands is None or config.bits_per_band is None:
-        measured_a = estimate_bit_agreement(
-            clks_a.unionByName(clks_b), key_col=config.key_col
-        )
-    config = _resolve_banding(config, n_rows, measured_a)
-    metrics["banding"] = {
-        "num_bands": config.num_bands,
-        "bits_per_band": config.bits_per_band,
-        "min_band_matches": config.min_band_matches,
-        "n_rows": n_rows,
-        "measured_bit_agreement": measured_a,
-    }
-
-    # Same int64 key-id domain as run_linkage — the shuffle-heavy middle
-    # (banding, the cross-party block join, the CLK payload joins) moves
-    # (long, long) rows, never (long, url-string). The party rides in
-    # the SIGN BIT of the kid (A ≥ 0, B < 0): cross-party pair selection
-    # is then a free sign predicate on the unioned capped blocks, and
-    # the skew cap sees both parties' contribution to a hot block at
-    # once (a boilerplate mega-block is a JOINT phenomenon — capping
-    # per-party would under-count its s_a × s_b pair volume).
-    kid_col = "_kid"
-    party_b_tag = F.lit(-(1 << 63))
-
-    def with_kids(
-        clks: DataFrame, stage: str, input_fp: str, is_b: bool
-    ) -> DataFrame:
-        if config.key_id_mode == "dense":
-            # Per-run ids → checkpoint the key↔id map itself (see
-            # run_linkage) so resumed _kid-bearing stages stay joinable.
-            def build_kids() -> DataFrame:
-                kid = F.monotonically_increasing_id()
-                if is_b:
-                    kid = kid.bitwiseOR(party_b_tag)
-                return clks.select(config.key_col).withColumn(kid_col, kid)
-
-            kids = runner.run(
-                stage, _fingerprint(config, stage, input_fp), build_kids,
-                parents=(stage.replace("kids", "clks"),),
-            )
-            return clks.join(kids, on=config.key_col).persist()
-        # 63-bit deterministic hash, party tag in the sign bit.
-        kid = F.shiftrightunsigned(F.xxhash64(F.col(config.key_col)), 1)
-        if is_b:
-            kid = kid.bitwiseOR(party_b_tag)
-        return clks.withColumn(kid_col, kid)
-
-    clks_ka = with_kids(clks_a, "kids_a", fp_a, is_b=False)
-    clks_kb = with_kids(clks_b, "kids_b", fp_b, is_b=True)
-    ids_a = clks_ka.select(kid_col, config.key_col)
-    ids_b = clks_kb.select(kid_col, config.key_col)
-
-    def bands(clks: DataFrame) -> DataFrame:
-        return block_keys(
-            clks,
-            l=config.schema.l,
-            num_bands=config.num_bands,
-            bits_per_band=config.bits_per_band,
-            seed=config.lsh_seed,
-            salt=config.lsh_salt,
-            key_cols=(kid_col,),
-        )
-
-    def build_blocks() -> DataFrame:
-        blocks = bands(clks_ka).unionByName(bands(clks_kb))
-        # Same single-exchange, single-materialization discipline as
-        # run_linkage: partition the unioned bands by block_key once —
-        # persist, NOT localCheckpoint, because an AQE checkpoint loses
-        # outputPartitioning and re-inserts the size-aggregate and
-        # cross-party join-side exchanges (see run_linkage's blocks
-        # stage for the 4M-ladder measurement). The cap aggregate and
-        # both sign-filtered join sides reuse the cached exchange; the
-        # runner skips a second materialization when the cap changed
-        # nothing.
-        blocks = blocks.repartition(
-            config.pair_partitions
-            or _banded_partitions(spark, n_rows * config.num_bands),
-            "block_key",
-        ).persist()
-        capped = blocks
-        if config.max_block_size:
-            capped, accounting = cap_block_size(
-                blocks,
-                config.max_block_size,
-                mode=config.block_cap_mode,
-                key_cols=(kid_col,),
-            )
-            metrics["block_cap_accounting"] = accounting.first().asDict()
-        if config.block_histogram:
-            metrics["block_size_histogram"] = {
-                int(r["log2_size"]): int(r["num_blocks"])
-                for r in block_size_histogram(capped).collect()
-            }
-        if capped is blocks:
-            capped._clkhash_prematerialized = True
-        return capped
-
-    blocks = runner.run(
-        "blocks", _fingerprint(config, "blocks", fp_ab), build_blocks,
-        parents=("clks_a", "clks_b"),
-    )
-    if metrics.get("blocks_resumed"):
-        # Restore hashpartitioning(block_key) lost in the parquet
-        # read-back (see run_linkage).
-        blocks = blocks.repartition(
-            config.pair_partitions
-            or _banded_partitions(spark, n_rows * config.num_bands),
-            "block_key",
-        ).persist()
-
-    _stage_scratch: list = []
-
-    def build_pairs() -> DataFrame:
-        pairs = candidate_pairs(
-            blocks.where(F.col(kid_col) >= 0),
-            other=blocks.where(F.col(kid_col) < 0),
-            key_col=kid_col,
-            repartition=None,  # pre-partitioned in the blocks stage
-            min_band_matches=config.min_band_matches,
-        )
-        scored = score_candidates(
-            pairs, clks_ka, threshold=config.threshold,
-            other_clks=clks_kb, key_col=kid_col,
-        )
-        # Back to user-facing keys BEFORE 1-1 matching: the mutual-best
-        # tie-break orders by key, which must stay the url ordering.
-        # Orientation is fixed (key_a from A, key_b from B) — no
-        # re-canonicalization.
-        scored = (
-            scored.join(
-                ids_a.select(F.col(kid_col).alias("key_a"),
-                             F.col(config.key_col).alias("_url_a")),
-                on="key_a",
-            )
-            .join(
-                ids_b.select(F.col(kid_col).alias("key_b"),
-                             F.col(config.key_col).alias("_url_b")),
-                on="key_b",
-            )
-            .select(
-                F.col("_url_a").alias("key_a"),
-                F.col("_url_b").alias("key_b"),
-                "score",
-            )
-        )
-        if not one_to_one:
-            return scored
-        # Scratch cache for the mutual-best windows (two consumers);
-        # released once the stage output is materialized.
-        scored = scored.persist()
-        _stage_scratch.append(scored)
-        scored.count()
-        return one_to_one_matching(scored)
-
-    pairs_fp = _fingerprint(
-        config, "pairs", f"{fp_ab}|one_to_one={one_to_one}"
-    )
-    matched = runner.run(
-        "pairs", pairs_fp, build_pairs, parents=("clks_a", "clks_b", "blocks")
-    )
-    for scratch in _stage_scratch:
-        scratch.unpersist()
-    _stage_scratch.clear()
-
-    def build_clusters() -> DataFrame:
-        components = connected_components(
-            matched, id_assignment=config.key_id_mode,
-            small_graph_edges=config.cluster_driver_gate_edges,
-            known_edge_bound=metrics.get("pairs_rows"),
-        )
-        all_keys = clks_a.select(config.key_col).union(
-            clks_b.select(config.key_col)
-        )
-        return attach_cluster_ids(
-            all_keys, components,
-            key_col=config.key_col, id_assignment=config.key_id_mode,
-        )
-
-    clusters = runner.run(
-        "clusters",
-        _fingerprint(config, "clusters", f"{fp_ab}|one_to_one={one_to_one}"),
-        build_clusters, parents=("pairs",),
-    )
-
-    return LinkageResult(
-        clks=clks_a.unionByName(clks_b),
-        blocks=blocks,  # kid domain, capped (party = kid sign bit)
-        pairs=matched,
-        clusters=clusters,
-        metrics=metrics,
-        config=config,
-    )
+    return _link(spark, [party_a, party_b], config, one_to_one)

@@ -219,3 +219,95 @@ class TestIvfSingleAssignPass:
             S.ivf_topk_two_level(emb, queries, q, k=10, nprobe=2)
         )
         assert self._arrow_nodes(plan) == 3, plan
+
+
+@pytest.fixture(scope="class")
+def capped_two_party(spark):
+    """Two-party runs over the boilerplate fixture of
+    tests/test_round3_fixes.py, 64 bands × 16 bits with the block-size
+    cap at 16: the shared boilerplate text forms an 80-row block in
+    every band, so the cap fires in all 64. Broadcast joins are off,
+    so the pair join is a shuffle join even at this fixture size."""
+    from clkhash_spark.pipeline import (
+        LinkageConfig,
+        run_linkage_two_party,
+        webpages_schema,
+    )
+
+    from .test_round3_fixes import _two_party_with_boilerplate
+
+    party_a, party_b, _ = _two_party_with_boilerplate(spark)
+    runs = {}
+
+    def run(cap_mode, key_id_mode="hash"):
+        if (cap_mode, key_id_mode) not in runs:
+            config = LinkageConfig(
+                schema=webpages_schema(), secret="r3-megablock",
+                num_bands=64, bits_per_band=16, max_block_size=16,
+                block_cap_mode=cap_mode, key_id_mode=key_id_mode,
+            )
+            runs[cap_mode, key_id_mode] = run_linkage_two_party(
+                spark, party_a, party_b, config
+            )
+        return runs[cap_mode, key_id_mode]
+
+    broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield run
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcast)
+    spark.catalog.clearCache()
+
+
+class TestTwoPartyCapFires:
+    # sha256 of the sorted pairs and the sorted cluster memberships (the
+    # digest perfbench checks), recorded before the single-table and
+    # two-party pipelines became one stage graph
+    DIGEST = "d3e53b819b97670fac0074c2e4b7325cd6b759ff8164fbe4f29d1459229523bc"
+
+    @pytest.mark.parametrize(
+        "cap_mode, join_exchanges", [("drop", 0), ("split", 2)]
+    )
+    def test_pair_join_reuses_blocks_partitioning(
+        self, capped_two_party, cap_mode, join_exchanges
+    ):
+        """The capped blocks stay persisted, so the pair join keeps the
+        blocks stage's hashpartitioning(block_key). Dropping oversized
+        blocks is a filter and adds no join-side exchange; splitting
+        rewrites block_key, so exactly the two join sides re-shuffle."""
+        import re
+
+        from clkhash_spark.pipeline import _candidate_pairs
+
+        result = capped_two_party(cap_mode)
+        acct = result.metrics["block_cap_accounting"]
+        assert acct["oversized_blocks"] == 64, acct
+        plan = plan_of(_candidate_pairs(
+            result.blocks, True, result.config.min_band_matches
+        ))
+        # formatted output: "(N) Exchange", "Input [...]", "Arguments:"
+        # lines per node; ENSURE_REQUIREMENTS marks planner-inserted
+        # exchanges (the blocks stage's own is REPARTITION_BY_NUM)
+        join_side = re.findall(
+            r"^\(\d+\) Exchange\nInput .*\nArguments: hashpartitioning"
+            r"\(block_key#\d+L, \d+\), ENSURE_REQUIREMENTS",
+            plan, re.MULTILINE,
+        )
+        assert len(join_side) == join_exchanges, plan
+
+    @pytest.mark.parametrize("key_id_mode", ["hash", "dense"])
+    def test_split_cap_outputs_pinned(self, capped_two_party, key_id_mode):
+        import hashlib
+        from collections import defaultdict
+
+        result = capped_two_party("split", key_id_mode)
+        pairs = sorted(
+            (r["key_a"], r["key_b"])
+            for r in result.pairs.select("key_a", "key_b").collect()
+        )
+        members = defaultdict(list)
+        for r in result.clusters.select("url", "cluster_id").collect():
+            members[r["cluster_id"]].append(r["url"])
+        clusters = sorted(sorted(m) for m in members.values())
+        assert (len(pairs), len(clusters)) == (41, 399)
+        digest = hashlib.sha256(repr((pairs, clusters)).encode())
+        assert digest.hexdigest() == self.DIGEST

@@ -158,6 +158,27 @@ class TestClusterEdgeBound:
         # bound > gate → falls through to the distributed contraction
         assert sorted(r["cluster_id"] is not None for r in out.collect())
 
+    def test_zero_gate_never_collects_even_with_zero_bound(
+        self, spark, monkeypatch
+    ):
+        from clkhash_spark.operators.cluster import connected_components
+
+        def no_driver_collect(self):
+            raise AssertionError("small_graph_edges=0 collected edges")
+
+        pairs = spark.createDataFrame(
+            [("x", "x")], ["key_a", "key_b"]  # self-loop only → no edges
+        )
+        # the session's concrete DataFrame class (pyspark.sql.DataFrame
+        # is only its base in Spark 4)
+        monkeypatch.setattr(type(pairs), "toArrow", no_driver_collect)
+        # 0 <= bound <= gate holds, but a zero gate is strict: the
+        # distributed path runs and returns the empty components
+        out = connected_components(
+            pairs, small_graph_edges=0, known_edge_bound=0
+        )
+        assert out.count() == 0
+
 
 class TestTwoLevelFit:
     def test_distributed_subfit_bit_identical(self, spark):

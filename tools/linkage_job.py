@@ -25,6 +25,7 @@ seconds.
 
 import argparse
 import json
+import os
 import time
 
 from pyspark.sql import SparkSession
@@ -65,16 +66,34 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
 
+    run = run_two_party if args.two_party else run_single_table
+    summary = run(spark, args, cores)
+
+    # Per-stage shuffle counters and occupancy: _StageRunner tags every
+    # job with a "clk:<stage>" group; with the event log enabled they
+    # are attributed to pipeline stages after the app stops (the log is
+    # finalized by stop()).
+    log_path = event_log_path(spark)
+    spark.stop()
+    if log_path:
+        summary.update(parse_event_log(log_path, cores))
+
+    line = json.dumps(summary)
+    print(line)
+    if args.json_out:
+        with open(args.json_out, "w") as fp:
+            fp.write(line + "\n")
+
+
+def run_single_table(spark, args, cores: int) -> dict:
+    """Single-table dedup over the synthetic web pages: times the CLK
+    encode stage alone, then the full linkage pipeline."""
     # Imported after getOrCreate and resolved from --py-files, as on a
     # real cluster.
     from clkhash_spark.operators.encode import encode_clks
     from clkhash_spark.pipeline import (LinkageConfig, run_linkage,
                                         webpages_schema)
     from clkhash_spark.sources.webpages import synthetic_webpages
-
-    if args.two_party:
-        run_two_party(spark, args, cores)
-        return
 
     pages = synthetic_webpages(spark, args.rows, seed=args.seed)
     pages = pages.select("url", "text").repartition(4 * cores).persist()
@@ -134,35 +153,10 @@ def main() -> None:
         )
         summary["quality"] = {k: round(v, 6) if isinstance(v, float) else v
                               for k, v in m.items()}
-
-    # Per-stage shuffle counters: _StageRunner tags every job with a
-    # "clk:<stage>" group; with the event log enabled we can attribute
-    # shuffle bytes/records to pipeline stages after the app stops (the
-    # log is finalized by stop()).
-    event_dir = None
-    app_id = spark.sparkContext.applicationId
-    try:
-        if spark.conf.get("spark.eventLog.enabled", "false") == "true":
-            event_dir = spark.conf.get("spark.eventLog.dir")
-    except Exception:
-        event_dir = None
-    spark.stop()
-    if event_dir:
-        summary["shuffle_by_stage"] = parse_shuffle_metrics(
-            event_dir, app_id
-        )
-        summary["occupancy_by_stage"] = parse_stage_occupancy(
-            event_dir, app_id, cores
-        )
-
-    line = json.dumps(summary)
-    print(line)
-    if args.json_out:
-        with open(args.json_out, "w") as fp:
-            fp.write(line + "\n")
+    return summary
 
 
-def run_two_party(spark, args, cores: int) -> None:
+def run_two_party(spark, args, cores: int) -> dict:
     """Two-party cross-linkage over overlapping synthetic parties: the
     headline workload of a linkage engine at scale (the single-table
     path deduplicates; this one matches A against B under one secret).
@@ -170,8 +164,6 @@ def run_two_party(spark, args, cores: int) -> None:
     ``--rows`` is the TOTAL encoded rows: rows/2 entities per party,
     50% overlap (rows/4 true cross-party matches, each a near-duplicate
     variant pair — never byte-identical)."""
-    import time as _time
-
     from pyspark.sql import functions as F
 
     from clkhash_spark.pipeline import (LinkageConfig,
@@ -210,7 +202,7 @@ def run_two_party(spark, args, cores: int) -> None:
         schema=webpages_schema(), secret=args.secret, key_col="key",
         target_candidates_per_row=args.target_candidates,
     )
-    t0 = _time.time()
+    t0 = time.time()
     result = run_linkage_two_party(
         spark,
         party_a.select("key", "text"),
@@ -219,14 +211,14 @@ def run_two_party(spark, args, cores: int) -> None:
     )
     result.pairs.persist()
     n_matched = result.pairs.count()
-    pipeline_s = _time.time() - t0
+    pipeline_s = time.time() - t0
 
     correct = (
         result.pairs.join(ent_a, on="key_a").join(ent_b, on="key_b")
         .where(F.col("_ent_a") == F.col("_ent_b"))
         .count()
     )
-    summary = {
+    return {
         "mode": "two_party",
         "cores": cores,
         "rows": args.rows,
@@ -242,56 +234,46 @@ def run_two_party(spark, args, cores: int) -> None:
         "banding": result.metrics.get("banding"),
     }
 
-    event_dir = None
-    app_id = spark.sparkContext.applicationId
+
+def event_log_path(spark):
+    """This application's event-log file, or None when event logging is
+    off."""
     try:
-        if spark.conf.get("spark.eventLog.enabled", "false") == "true":
-            event_dir = spark.conf.get("spark.eventLog.dir")
+        if spark.conf.get("spark.eventLog.enabled", "false") != "true":
+            return None
+        path = spark.conf.get("spark.eventLog.dir")
     except Exception:
-        event_dir = None
-    spark.stop()
-    if event_dir:
-        summary["shuffle_by_stage"] = parse_shuffle_metrics(
-            event_dir, app_id
-        )
-        summary["occupancy_by_stage"] = parse_stage_occupancy(
-            event_dir, app_id, cores
-        )
-
-    line = json.dumps(summary)
-    print(line)
-    if args.json_out:
-        with open(args.json_out, "w") as fp:
-            fp.write(line + "\n")
-
-
-def parse_stage_occupancy(event_dir: str, app_id: str, cores: int) -> dict:
-    """Scheduler occupancy per job group from the event log:
-    ``sum(task finish - task launch) / (group wall span x cores)``.
-
-    Low occupancy means cores sat idle inside the stage's wall window —
-    fixed driver rounds, AQE barriers, Python-worker waves — while high
-    occupancy with a sub-linear speedup means the cores were busy but
-    each task ran slower (a shared-substrate ceiling: DRAM bandwidth /
-    SMT contention). This is the discriminator the round-4 scaling
-    debate needed: the two explanations predict opposite occupancy
-    signatures at the bigger core count.
-    """
-    import os
-
-    path = event_dir
+        return None
     for prefix in ("file://", "file:"):
         if path.startswith(prefix):
             path = path[len(prefix):]
             break
-    log_path = os.path.join(path, app_id)
+    return os.path.join(path, spark.sparkContext.applicationId)
+
+
+def parse_event_log(log_path: str, cores: int) -> dict:
+    """Per-job-group shuffle counters and scheduler occupancy from one
+    pass over the Spark event log (pure JSON-lines scan; no UI/REST
+    dependency).
+
+    ``shuffle_by_stage``: shuffle read/write bytes and records.
+    ``occupancy_by_stage``: ``sum(task finish - task launch) / (group
+    wall span x cores)``. Low occupancy means cores sat idle inside the
+    stage's wall window — fixed driver rounds, AQE barriers,
+    Python-worker waves — while high occupancy with a sub-linear
+    speedup means the cores were busy but each task ran slower (a
+    shared-substrate ceiling: DRAM bandwidth / SMT contention). This is
+    the discriminator the round-4 scaling debate needed: the two
+    explanations predict opposite occupancy signatures at the bigger
+    core count.
+    """
     if not os.path.exists(log_path):
-        if os.path.exists(log_path + ".inprogress"):
-            log_path += ".inprogress"
-        else:
-            return {}
+        log_path += ".inprogress"
+        if not os.path.exists(log_path):
+            return {"shuffle_by_stage": {}, "occupancy_by_stage": {}}
 
     stage_group: dict = {}
+    shuffle: dict = {}
     spans: dict = {}
     with open(log_path) as fp:
         for raw in fp:
@@ -306,77 +288,15 @@ def parse_stage_occupancy(event_dir: str, app_id: str, cores: int) -> dict:
                 )
                 for info in event.get("Stage Infos", []):
                     stage_group.setdefault(info["Stage ID"], group)
-            elif kind == "SparkListenerTaskEnd":
-                info = event.get("Task Info") or {}
-                group = stage_group.get(event.get("Stage ID"))
-                if group is None:
-                    continue
-                launch = info.get("Launch Time")
-                finish = info.get("Finish Time")
-                if not launch or not finish:
-                    continue
-                entry = spans.setdefault(
-                    group,
-                    {"task_ms": 0, "first_launch": launch,
-                     "last_finish": finish},
-                )
-                entry["task_ms"] += finish - launch
-                entry["first_launch"] = min(entry["first_launch"], launch)
-                entry["last_finish"] = max(entry["last_finish"], finish)
-
-    out = {}
-    for group, entry in spans.items():
-        wall_s = (entry["last_finish"] - entry["first_launch"]) / 1000.0
-        task_s = entry["task_ms"] / 1000.0
-        out[group] = {
-            "task_seconds": round(task_s, 2),
-            "wall_seconds": round(wall_s, 2),
-            "occupancy": round(task_s / (wall_s * cores), 3)
-            if wall_s > 0 else None,
-        }
-    return out
-
-
-def parse_shuffle_metrics(event_dir: str, app_id: str) -> dict:
-    """Aggregate shuffle read/write bytes+records per job group from the
-    Spark event log (pure JSON-lines scan; no UI/REST dependency)."""
-    import os
-
-    path = event_dir
-    for prefix in ("file://", "file:"):
-        if path.startswith(prefix):
-            path = path[len(prefix):]
-            break
-    log_path = os.path.join(path, app_id)
-    if not os.path.exists(log_path):
-        if os.path.exists(log_path + ".inprogress"):
-            log_path += ".inprogress"
-        else:
-            return {}
-
-    stage_group: dict = {}
-    agg: dict = {}
-    with open(log_path) as fp:
-        for raw in fp:
-            try:
-                event = json.loads(raw)
-            except json.JSONDecodeError:
                 continue
-            kind = event.get("Event")
-            if kind == "SparkListenerJobStart":
-                group = (event.get("Properties") or {}).get(
-                    "spark.jobGroup.id"
-                )
-                for info in event.get("Stage Infos", []):
-                    stage_group.setdefault(info["Stage ID"], group)
-            elif kind == "SparkListenerTaskEnd":
-                metrics = event.get("Task Metrics")
-                if not metrics:
-                    continue
-                group = stage_group.get(event.get("Stage ID"))
-                if group is None:
-                    continue
-                entry = agg.setdefault(group, {
+            if kind != "SparkListenerTaskEnd":
+                continue
+            group = stage_group.get(event.get("Stage ID"))
+            if group is None:
+                continue
+            metrics = event.get("Task Metrics")
+            if metrics:
+                entry = shuffle.setdefault(group, {
                     "write_bytes": 0, "write_records": 0,
                     "read_bytes": 0, "read_records": 0,
                 })
@@ -391,7 +311,30 @@ def parse_shuffle_metrics(event_dir: str, app_id: str) -> dict:
                     + sr.get("Remote Bytes Read", 0)
                 )
                 entry["read_records"] += sr.get("Total Records Read", 0)
-    return agg
+            info = event.get("Task Info") or {}
+            launch = info.get("Launch Time")
+            finish = info.get("Finish Time")
+            if launch and finish:
+                span = spans.setdefault(
+                    group,
+                    {"task_ms": 0, "first_launch": launch,
+                     "last_finish": finish},
+                )
+                span["task_ms"] += finish - launch
+                span["first_launch"] = min(span["first_launch"], launch)
+                span["last_finish"] = max(span["last_finish"], finish)
+
+    occupancy = {}
+    for group, span in spans.items():
+        wall_s = (span["last_finish"] - span["first_launch"]) / 1000.0
+        task_s = span["task_ms"] / 1000.0
+        occupancy[group] = {
+            "task_seconds": round(task_s, 2),
+            "wall_seconds": round(wall_s, 2),
+            "occupancy": round(task_s / (wall_s * cores), 3)
+            if wall_s > 0 else None,
+        }
+    return {"shuffle_by_stage": shuffle, "occupancy_by_stage": occupancy}
 
 
 if __name__ == "__main__":
