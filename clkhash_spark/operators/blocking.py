@@ -28,7 +28,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Tuple
+from typing import Any, Dict, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -135,7 +135,7 @@ def cap_block_size(
     split_salt_col: Optional[str] = None,
     key_cols: Sequence[str] = ("url",),
     block_col: str = "block_key",
-) -> Tuple[DataFrame, DataFrame]:
+) -> Tuple[DataFrame, Dict[str, Any]]:
     """Enforce a block-size cap; returns ``(capped_blocks, accounting)``.
 
     ``mode='drop'`` removes oversized blocks entirely (their pair volume is
@@ -145,12 +145,12 @@ def cap_block_size(
     near-duplicates still collide in the other ``num_bands - 1`` bands, so
     recall degrades gracefully instead of runtime exploding.
 
-    ``accounting`` is a 1-row DataFrame: blocks affected, rows affected,
-    pairs dropped (upper bound).
+    ``accounting`` is a plain dict: blocks affected
+    (``oversized_blocks``), rows affected (``rows_in_oversized``), pairs
+    dropped (``pair_volume_affected``, an upper bound).
     """
     if mode not in ("drop", "split"):
         raise ValueError(f"unknown cap mode {mode!r}")
-    spark = blocks.sparkSession
     sizes = blocks.groupBy(block_col).agg(F.count("*").alias("_block_size"))
     # Cheap pre-check: when no block exceeds the cap (the common case for
     # healthy band widths), skip the size join-back entirely — one small
@@ -160,12 +160,8 @@ def cap_block_size(
     ).first()
     max_size = max_size_row["max_size"] or 0
     if max_size <= max_block_size:
-        accounting = spark.createDataFrame(
-            [(0, 0, 0.0)],
-            ["oversized_blocks", "rows_in_oversized",
-             "pair_volume_affected"],
-        )
-        return blocks, accounting
+        return blocks, {"oversized_blocks": 0, "rows_in_oversized": 0,
+                        "pair_volume_affected": 0.0}
     annotated = blocks.join(sizes, on=block_col, how="left")
     oversized = annotated.where(F.col("_block_size") > max_block_size)
 
@@ -177,7 +173,7 @@ def cap_block_size(
         F.coalesce(
             F.sum(F.col("size") * (F.col("size") - 1) / 2), F.lit(0.0)
         ).alias("pair_volume_affected"),
-    )
+    ).first().asDict()
 
     if mode == "drop":
         capped = annotated.where(

@@ -14,11 +14,10 @@ Both steps are one shuffle aggregation + one join each; edges shrink to
 stars (every vertex directly attached to its component's minimum id).
 
 Scale notes:
-- Vertices are int64 (hash of the key, or the key itself when callers
-  already work in a hashed-id domain) — iterative joins on longs, one
-  final join back to keys.
-- ``localCheckpoint`` per round truncates lineage (use
-  ``reliable=True`` → ``checkpoint`` on a real cluster).
+- Vertices are int64: integer keys pass through (the linkage pipeline
+  clusters on its own record ids), string keys are hashed with
+  xxhash64 — iterative joins on longs, one final join back to keys.
+- ``localCheckpoint`` per round truncates lineage.
 - Convergence is detected by an edge-set checksum (count + hash sum) —
   two tiny aggregates per round, no data collect.
 """
@@ -33,28 +32,19 @@ from pyspark.sql import functions as F
 __all__ = ["connected_components", "attach_cluster_ids"]
 
 
-def _persist(df: DataFrame, reliable: bool) -> DataFrame:
-    """Truncate lineage between iterations."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 def _materialize_with_checksum(
-    df: DataFrame, reliable: bool
+    df: DataFrame,
 ) -> Tuple[DataFrame, Tuple[int, int]]:
-    """Checkpoint + convergence checksum in ONE Spark job.
+    """localCheckpoint + convergence checksum in ONE Spark job.
 
-    A non-eager (local)checkpoint materializes during the ``count``
+    A non-eager localCheckpoint materializes during the ``count``
     action, and an ``Observation`` rides the same action to collect the
     edge-set checksum — halving the per-round job count vs the old
     eager-checkpoint-then-aggregate pair (per-round driver latency is
     what dominates clustering wall time at small scale)."""
     from pyspark.sql import Observation
 
-    base = df.checkpoint(eager=False) if reliable else df.localCheckpoint(
-        eager=False
-    )
+    base = df.localCheckpoint(eager=False)
     obs = Observation()
     out = base.observe(
         obs,
@@ -149,35 +139,26 @@ def connected_components(
     key_a: str = "key_a",
     key_b: str = "key_b",
     max_iterations: int = 50,
-    reliable: bool = False,
-    id_assignment: str = "hash",
     small_graph_edges: int = 500_000,
     known_edge_bound: Optional[int] = None,
 ) -> DataFrame:
     """Cluster pairs into components; returns ``(key, cluster_id)``.
 
-    ``cluster_id`` is the minimum int64 vertex id in the component —
-    deterministic for a given input under ``id_assignment='hash'``.
+    ``cluster_id`` is the minimum int64 vertex id in the component.
+    Integer keys are their own vertex ids, so a caller that already
+    holds unique int64 record ids (the linkage pipeline's kids) gets
+    labels in that id domain. String keys are hashed with xxhash64
+    (collisions negligible below ~10^9 distinct keys). Either way the
+    labels are deterministic for a given input.
 
-    ``id_assignment``:
-
-    - ``'hash'`` (default): string keys → xxhash64 (collisions
-      negligible below ~10^9 distinct keys); numeric keys pass through.
-    - ``'dense'``: assign each distinct key a unique per-run int64 via
-      ``monotonically_increasing_id`` — no birthday-collision risk at
-      any scale (the 10^12-row path), at the cost of one extra distinct
-      + two mapping joins, and cluster-id *values* that vary run-to-run
-      (membership does not).
-
-    Hybrid execution: the deduplicated edge count rides the first
-    materialization's checksum for free; at or below
-    ``small_graph_edges`` the components are solved driver-side —
-    edges arrive via Arrow (``toArrow``: 16 B/edge on the wire and in
-    numpy, no per-Row Python objects — so the transfer is
-    16 B × the configured gate: ~8 MB at this function's 500k
-    default, ~64 MB at the 4,000,000-edge gate the linkage pipeline
-    passes via ``LinkageConfig.cluster_driver_gate_edges``, plus a
-    labels DataFrame of up to 2×gate rows sent back through
+    Hybrid execution: at or below ``small_graph_edges`` deduplicated
+    edges the components are solved driver-side — edges arrive via
+    Arrow (``toArrow``: 16 B/edge on the wire and in numpy, no per-Row
+    Python objects — so the transfer is 16 B × the configured gate:
+    ~8 MB at this function's 500k default, ~64 MB at the
+    4,000,000-edge gate the linkage pipeline passes via
+    ``LinkageConfig.cluster_driver_gate_edges``, plus a labels
+    DataFrame of up to 2×gate rows sent back through
     ``createDataFrame``) and are labelled by one vectorized hook+jump
     pass instead of O(log n) rounds of 3-4 Spark jobs each — at
     small/medium scale the rounds are pure fixed latency (measured:
@@ -185,133 +166,78 @@ def connected_components(
     distributed large-star/small-star contraction runs;
     ``small_graph_edges=0`` always takes the distributed path
     (strict: even an empty edge set never collects).
+
+    The gate reads the edge count from the first materialization's
+    checksum, unless ``known_edge_bound`` (e.g. the pipeline's
+    pairs-stage row count, which upper-bounds the deduplicated edge
+    count) already fits under it: then that job is skipped and the
+    edges are collected directly. Results are identical either way.
     """
-    key_type = dict(pairs.dtypes)[key_a]
-
-    if id_assignment == "dense":
-        key_ids = (
-            pairs.select(F.col(key_a).alias("key"))
-            .union(pairs.select(F.col(key_b).alias("key")))
-            .distinct()
-            .withColumn("id", F.monotonically_increasing_id())
-        )
-        # The id map feeds both the edge build and the final join —
-        # persist so both consumers see ONE assignment (re-evaluation
-        # could repartition and renumber).
-        key_ids = _persist(key_ids, reliable)
-        edges = (
-            pairs.join(
-                key_ids.select(F.col("key").alias(key_a),
-                               F.col("id").alias("u")),
-                on=key_a,
-            )
-            .join(
-                key_ids.select(F.col("key").alias(key_b),
-                               F.col("id").alias("v")),
-                on=key_b,
-            )
-            .select("u", "v")
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
+    if dict(pairs.dtypes)[key_a] in ("bigint", "int", "long"):
+        vertex = lambda c: F.col(c).cast("long")  # noqa: E731
     else:
-        if key_type in ("bigint", "int", "long"):
-            vertex = lambda c: F.col(c).cast("long")  # noqa: E731
-        else:
-            vertex = lambda c: F.xxhash64(F.col(c))  # noqa: E731
-        edges = (
-            pairs.select(vertex(key_a).alias("u"), vertex(key_b).alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        key_ids = (
-            pairs.select(F.col(key_a).alias("key"))
-            .union(pairs.select(F.col(key_b).alias("key")))
-            .distinct()
-            .select("key", vertex("key").alias("id"))
-        )
+        vertex = lambda c: F.xxhash64(F.col(c))  # noqa: E731
+    edges = (
+        pairs.select(vertex(key_a).alias("u"), vertex(key_b).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    key_ids = (
+        pairs.select(F.col(key_a).alias("key"))
+        .union(pairs.select(F.col(key_b).alias("key")))
+        .distinct()
+        .select("key", vertex("key").alias("id"))
+    )
 
-    if (
+    on_driver = (
         small_graph_edges > 0
         and known_edge_bound is not None
         and 0 <= known_edge_bound <= small_graph_edges
-        and id_assignment != "dense"
-    ):
-        # The caller already knows the pair count (e.g. the pipeline's
-        # pairs-stage row metric), which upper-bounds the deduplicated
-        # edge count — so the driver-gate decision needs NO
-        # materialize-and-checksum job: collect the edges via Arrow
-        # directly (one job instead of two full passes). Results are
-        # identical to the gated path below. (Dense mode still needs
-        # the materialization to pin its per-run id map.)
-        tbl = edges.select("u", "v").toArrow()
-        if tbl.num_rows == 0:
-            return key_ids.select(
-                "key", F.col("id").alias("cluster_id")
-            ).limit(0)
-        labels_pdf = _union_find_labels(
-            tbl.column("u").to_numpy(), tbl.column("v").to_numpy()
-        )
-        all_labels = pairs.sparkSession.createDataFrame(labels_pdf)
-        return (
-            key_ids.join(all_labels, on="id", how="inner")
-            .select("key", F.col("label").alias("cluster_id"))
-        )
-
-    edges, signature = _materialize_with_checksum(edges, reliable)
-
-    if signature[0] == 0:
-        # No edges: every key of key_ids is its own (absent) component;
-        # return the empty mapping (attach_cluster_ids fills
-        # singletons). Nothing to collect or contract on either path.
-        return key_ids.select(
-            "key", F.col("id").alias("cluster_id")
-        ).limit(0)
-
-    if 0 < signature[0] <= small_graph_edges:
-        spark = edges.sparkSession
-        # Arrow transfer, not collect(): 16 B/edge on the wire and as
-        # numpy columns (~8 MB at the default gate) — collect() would
-        # materialize Row objects at ~10x that.
-        tbl = edges.select("u", "v").toArrow()
-        labels_pdf = _union_find_labels(
-            tbl.column("u").to_numpy(), tbl.column("v").to_numpy()
-        )
-        all_labels = spark.createDataFrame(labels_pdf)
-        return (
-            key_ids.join(all_labels, on="id", how="inner")
-            .select("key", F.col("label").alias("cluster_id"))
-        )
-
-    converged = False
-    for _ in range(max_iterations):
-        edges, new_signature = _materialize_with_checksum(
-            _small_star(_large_star(edges)), reliable
-        )
-        if new_signature == signature:
-            converged = True
-            break
-        signature = new_signature
-    if not converged:
-        # Exhausting the budget without a stable edge set means the
-        # final edges may not be star-shaped — emitting labels would be
-        # silently wrong. O(log n) convergence makes this unreachable in
-        # practice; fail loudly rather than mislabel.
-        raise RuntimeError(
-            f"connected_components did not converge within "
-            f"{max_iterations} iterations"
-        )
-
-    # Fixpoint edges are stars (v → component min). Roots map to
-    # themselves.
-    labels = edges.select(F.col("u").alias("id"), F.col("v").alias("label"))
-    roots = (
-        edges.select(F.col("v").alias("id"))
-        .distinct()
-        .join(labels.select("id"), on="id", how="left_anti")
-        .withColumn("label", F.col("id"))
     )
-    all_labels = labels.unionByName(roots)
+    if not on_driver:
+        edges, signature = _materialize_with_checksum(edges)
+        on_driver = 0 < signature[0] <= small_graph_edges
+    if on_driver:
+        # Arrow transfer, not collect(): collect() would materialize
+        # Row objects at ~10x the 16 B/edge of the numpy columns.
+        tbl = edges.select("u", "v").toArrow()
+        all_labels = pairs.sparkSession.createDataFrame(
+            _union_find_labels(
+                tbl.column("u").to_numpy(), tbl.column("v").to_numpy()
+            ),
+            schema="id long, label long",
+        )
+    else:
+        converged = False
+        for _ in range(max_iterations):
+            edges, new_signature = _materialize_with_checksum(
+                _small_star(_large_star(edges))
+            )
+            if new_signature == signature:
+                converged = True
+                break
+            signature = new_signature
+        if not converged:
+            # Exhausting the budget without a stable edge set means the
+            # final edges may not be star-shaped — emitting labels would
+            # be silently wrong. O(log n) convergence makes this
+            # unreachable in practice; fail loudly rather than mislabel.
+            raise RuntimeError(
+                f"connected_components did not converge within "
+                f"{max_iterations} iterations"
+            )
+        # Fixpoint edges are stars (v → component min). Roots map to
+        # themselves.
+        labels = edges.select(
+            F.col("u").alias("id"), F.col("v").alias("label")
+        )
+        roots = (
+            edges.select(F.col("v").alias("id"))
+            .distinct()
+            .join(labels.select("id"), on="id", how="left_anti")
+            .withColumn("label", F.col("id"))
+        )
+        all_labels = labels.unionByName(roots)
 
     return (
         key_ids.join(all_labels, on="id", how="inner")
@@ -323,18 +249,12 @@ def attach_cluster_ids(
     records: DataFrame,
     clusters: DataFrame,
     key_col: str = "url",
-    id_assignment: str = "hash",
 ) -> DataFrame:
-    """Left-join cluster ids back onto records; singletons get their own
-    id (their key hash, or a fresh negative id under
-    ``id_assignment='dense'`` — disjoint from the non-negative dense
-    component labels), so the output is a total clustering."""
-    key_type = dict(records.dtypes)[key_col]
-    if id_assignment == "dense":
-        fallback = F.monotonically_increasing_id().bitwiseOR(
-            F.lit(-(1 << 63))
-        )
-    elif key_type in ("bigint", "int", "long"):
+    """Left-join cluster ids back onto records; a record in no component
+    (a singleton) gets its own vertex id — the key itself for integer
+    keys, its xxhash64 otherwise, as in :func:`connected_components` —
+    so the output is a total clustering in one id domain."""
+    if dict(records.dtypes)[key_col] in ("bigint", "int", "long"):
         fallback = F.col(key_col).cast("long")
     else:
         fallback = F.xxhash64(F.col(key_col))

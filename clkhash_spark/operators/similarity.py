@@ -445,8 +445,10 @@ class _single_thread_blas:
     Lloyd then amplifies an argmax tie-flip into visibly different
     centroids (observed: 3/196 sub-cells off by ~3e-3 at 100k rows).
     Wrapping BOTH sub-fit paths in this makes the executor-side fit
-    bit-identical to the driver loop. No-op when the OpenBLAS control
-    symbol isn't loadable (non-OpenBLAS numpy builds).
+    bit-identical to the driver loop. No-op unless both OpenBLAS
+    thread-count symbols (set and get) are loadable: without the get
+    symbol the prior count could not be restored, and the block would
+    leave BLAS pinned to one thread.
     """
 
     _lib = None
@@ -487,17 +489,15 @@ class _single_thread_blas:
             except Exception:  # pragma: no cover - defensive
                 cls._lib = None
         self._prev = None
-        if cls._lib:
+        if cls._lib and cls._lib[1] is not None:
             set_fn, get_fn = cls._lib
-            if get_fn is not None:
-                self._prev = int(get_fn())
+            self._prev = int(get_fn())
             set_fn(1)
         return self
 
     def __exit__(self, *exc):
-        cls = _single_thread_blas
-        if cls._lib and self._prev:
-            cls._lib[0](self._prev)
+        if self._prev is not None:
+            _single_thread_blas._lib[0](self._prev)
         return False
 
 

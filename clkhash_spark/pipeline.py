@@ -14,7 +14,7 @@ import os
 import time
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import Any, Dict, List, Optional, Sequence, Union
+from typing import Any, Dict, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -213,8 +213,10 @@ class LinkageConfig:
     validate: bool = False
     checkpoint_dir: Optional[str] = None
     resume: bool = True
-    # 'hash': int64 keys via xxhash64 (deterministic; collisions
-    # negligible < ~10^9 rows). 'dense': unique per-run ids via
+    # How the pipeline's int64 record ids ("kids") are made; blocking,
+    # scoring and clustering all run on them, and cluster ids are kids.
+    # 'hash': xxhash64 of the key (deterministic; collisions negligible
+    # < ~10^9 rows). 'dense': unique per-run ids via
     # monotonically_increasing_id — survives 10^12-row inputs with no
     # birthday-collision risk (cluster-id values then vary run-to-run;
     # membership does not).
@@ -651,9 +653,11 @@ def _link(
         config.input_fingerprint or _input_fingerprint(p) for p in parties
     ]
     blocks_fp = "+".join(input_fps)
-    pairs_fp = (
-        f"{blocks_fp}|one_to_one={one_to_one}" if two_party else blocks_fp
-    )
+    # "|kid_pairs": the pairs table carries the kids clustering runs
+    # on, so a resume never reads a pairs table written without them.
+    pairs_fp = f"{blocks_fp}|kid_pairs"
+    if two_party:
+        pairs_fp += f"|one_to_one={one_to_one}"
 
     def encode(df: DataFrame):
         return lambda: (encode_clks(
@@ -778,7 +782,7 @@ def _link(
                 mode=config.block_cap_mode,
                 key_cols=(_KID,),
             )
-            metrics["block_cap_accounting"] = accounting.first().asDict()
+            metrics["block_cap_accounting"] = accounting
             if capped is not blocks:
                 blocks = capped.persist()
         return blocks, True
@@ -796,8 +800,6 @@ def _link(
             "block_key",
         ).persist()
 
-    scratch: List[DataFrame] = []
-
     def build_pairs():
         scored = score_candidates(
             _candidate_pairs(blocks, two_party, config.min_band_matches),
@@ -807,7 +809,8 @@ def _link(
             key_col=_KID,
         )
         # Back to user-facing keys, BEFORE 1-1 matching: its mutual-best
-        # tie-break orders by key, which must stay the key ordering.
+        # tie-break orders by key, which must stay the key ordering. The
+        # kids ride along as _kid_a/_kid_b: clustering runs on them.
         scored = scored.join(
             ids[0].select(F.col(_KID).alias("key_a"),
                           F.col(key).alias("_url_a")),
@@ -817,39 +820,37 @@ def _link(
                            F.col(key).alias("_url_b")),
             on="key_b",
         )
-        if not two_party:
+        if two_party:  # orientation is fixed: key_a from A, key_b from B
+            swap = F.lit(False)
+        else:
             # Pairs were canonicalized in the kid domain; re-canonicalize
-            # on the user-facing keys (string order != hash order).
-            return scored.select(
-                F.least("_url_a", "_url_b").alias("key_a"),
-                F.greatest("_url_a", "_url_b").alias("key_b"),
-                "score",
-            ), False
-        # Orientation is fixed: key_a from A, key_b from B.
-        scored = scored.select(
-            F.col("_url_a").alias("key_a"),
-            F.col("_url_b").alias("key_b"),
-            "score",
-        )
-        if not one_to_one:
-            return scored, False
-        # Scratch cache for the mutual-best windows (two consumers);
-        # released once the stage output is materialized.
-        scored = scored.persist()
-        scratch.append(scored)
-        scored.count()
-        return one_to_one_matching(scored), False
+            # on the user-facing keys (string order != hash order),
+            # swapping the kids with them.
+            swap = F.col("_url_a") > F.col("_url_b")
+        scored = scored.select("score", *(
+            F.when(swap, F.col(b)).otherwise(F.col(a)).alias(name)
+            for name, a, b in (
+                ("key_a", "_url_a", "_url_b"),
+                ("key_b", "_url_b", "_url_a"),
+                (f"{_KID}_a", "key_a", "key_b"),
+                (f"{_KID}_b", "key_b", "key_a"),
+            )
+        ))
+        if one_to_one:
+            scored = one_to_one_matching(scored)
+        return scored, False
 
     pairs = runner.run(
         "pairs", _fingerprint(config, "pairs", pairs_fp), build_pairs,
         parents=(*clk_stages, "blocks"),
     )
-    for df in scratch:
-        df.unpersist()
 
     def build_clusters():
+        # Cluster in the kid domain: the kids are the run's only record
+        # ids, so every record, singletons included, gets a kid-valued
+        # cluster id (the component's minimum kid).
         components = connected_components(
-            pairs, id_assignment=config.key_id_mode,
+            pairs, key_a=f"{_KID}_a", key_b=f"{_KID}_b",
             small_graph_edges=config.cluster_driver_gate_edges,
             # the materialized pairs-stage row count upper-bounds the
             # edge count, letting the driver-gate path skip its
@@ -857,9 +858,8 @@ def _link(
             known_edge_bound=metrics.get("pairs_rows"),
         )
         return attach_cluster_ids(
-            reduce(DataFrame.union, [df.select(key) for df in clks]),
-            components, key_col=key, id_assignment=config.key_id_mode,
-        ), False
+            reduce(DataFrame.union, ids), components, key_col=_KID,
+        ).select(key, "cluster_id"), False
 
     clusters = runner.run(
         "clusters", _fingerprint(config, "clusters", pairs_fp),
@@ -869,7 +869,7 @@ def _link(
     return LinkageResult(
         clks=reduce(DataFrame.unionByName, clks),
         blocks=blocks,  # kid domain, capped (party = kid sign bit)
-        pairs=pairs,
+        pairs=pairs.select("key_a", "key_b", "score"),
         clusters=clusters,
         metrics=metrics,
         config=config,
@@ -904,8 +904,11 @@ def run_linkage_two_party(
 
     ``party_a``/``party_b`` rows must carry distinct ``config.key_col``
     values across parties (prefix them if needed). Returns pairs as
-    (key_a from party_a, key_b from party_b, score); ``clusters`` holds
-    the matched-pair components (useful when one_to_one=False).
+    (key_a from party_a, key_b from party_b, score); ``clusters`` gives
+    every record of both parties a ``cluster_id`` (its matched-pair
+    component, useful when one_to_one=False). Cluster ids are kids, the
+    run's int64 record ids: a component's id is its minimum kid, and a
+    singleton's is its own.
 
     The same stage graph as :func:`run_linkage`, over two parties:
     stages ``clks_a`` / ``clks_b`` / ``blocks`` / ``pairs`` /

@@ -1,6 +1,6 @@
 """Round-2 regression tests: split-cap overflow, auto-tuned banding,
 dense-id mode, stage-fingerprint safety, two-party resume, vectorized
-simhash, convergence guard."""
+simhash. The convergence guard is tested in test_cluster.py."""
 
 import hashlib
 
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from clkhash_spark.operators.blocking import cap_block_size
-from clkhash_spark.operators.cluster import connected_components
 from clkhash_spark.operators.dedup import simhash, _WS
 from clkhash_spark.pipeline import (
     LinkageConfig,
@@ -55,9 +54,8 @@ class TestBlockSplitOverflow:
         ).count() == 0
         # non-oversized block untouched
         assert capped.where(F.col("block_key") == (3 << 48)).count() == 50
-        a = acct.first()
-        assert a["oversized_blocks"] == 1
-        assert a["rows_in_oversized"] == n
+        assert acct["oversized_blocks"] == 1
+        assert acct["rows_in_oversized"] == n
 
 
 class TestTunedBlockingWiring:
@@ -152,38 +150,11 @@ class TestDenseIdMode:
         assert membership(hash_result.clusters) == membership(
             dense_result.clusters
         )
-
-    def test_dense_ids_unique_per_key(self, spark):
-        pairs = spark.createDataFrame(
-            [(f"k{i}", f"k{i+1}") for i in range(0, 400, 2)],
-            ["key_a", "key_b"],
+        # exactly one row (one cluster id) per key
+        dense_urls = [r["url"] for r in dense_result.clusters.collect()]
+        assert sorted(dense_urls) == sorted(
+            r["url"] for r in pages.collect()
         )
-        out = connected_components(pairs, id_assignment="dense")
-        assert out.count() == out.select("key").distinct().count()
-        # 200-edge perfect matching → 200 components of size 2
-        assert out.groupBy("cluster_id").count().where(
-            F.col("count") != 2
-        ).count() == 0
-
-
-class TestConvergenceGuard:
-    def test_nonconvergence_raises(self, spark):
-        chain = spark.createDataFrame(
-            [(i, i + 1) for i in range(64)], ["key_a", "key_b"]
-        )
-        # small_graph_edges=0 forces the distributed rounds (the hybrid
-        # driver path would solve a 64-edge chain without iterating).
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(
-                chain, max_iterations=1, small_graph_edges=0
-            )
-
-    def test_default_budget_converges(self, spark):
-        chain = spark.createDataFrame(
-            [(i, i + 1) for i in range(64)], ["key_a", "key_b"]
-        )
-        out = connected_components(chain, small_graph_edges=0)
-        assert out.select("cluster_id").distinct().count() == 1
 
 
 class TestFingerprintSafety:

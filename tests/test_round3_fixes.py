@@ -276,59 +276,6 @@ class TestAnnRecall:
         assert r4 >= 0.60, r4  # measured 0.75 at 1/2 corpus scanned
 
 
-class TestHybridConnectedComponents:
-    def _random_graph(self, spark, n_edges=400, n_nodes=300):
-        import hashlib
-
-        edges = []
-        for i in range(n_edges):
-            h = hashlib.sha256(f"edge:{i}".encode()).digest()
-            u = int.from_bytes(h[:4], "big") % n_nodes
-            v = int.from_bytes(h[4:8], "big") % n_nodes
-            if u != v:
-                edges.append((f"n{u}", f"n{v}"))
-        return spark.createDataFrame(edges, ["key_a", "key_b"])
-
-    def test_driver_path_matches_distributed(self, spark):
-        """The union-find fast path must produce the exact (key,
-        cluster_id) mapping of the star-contraction rounds — same
-        min-hash-id labels, not just the same membership."""
-        from clkhash_spark.operators.cluster import connected_components
-
-        pairs = self._random_graph(spark)
-        fast = {
-            (r["key"], r["cluster_id"])
-            for r in connected_components(pairs).collect()
-        }
-        slow = {
-            (r["key"], r["cluster_id"])
-            for r in connected_components(
-                pairs, small_graph_edges=0
-            ).collect()
-        }
-        assert fast == slow and fast
-
-    def test_driver_path_long_chain(self, spark):
-        """A 5000-node chain (worst diameter) is exactly the shape the
-        driver path wins on; labels must be the chain-wide minimum."""
-        from pyspark.sql import functions as F2
-
-        from clkhash_spark.operators.cluster import connected_components
-
-        chain = spark.range(5000).select(
-            F.col("id").alias("key_a"), (F.col("id") + 1).alias("key_b")
-        )
-        out = connected_components(chain)
-        assert out.select("cluster_id").distinct().count() == 1
-        assert out.agg(F2.min("cluster_id")).first()[0] == 0
-
-    def test_empty_pairs(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
-
-        empty = spark.createDataFrame([], "key_a string, key_b string")
-        assert connected_components(empty).count() == 0
-
-
 class TestCalibratedBanding:
     def test_agreement_estimate_deterministic_and_sane(self, spark):
         from clkhash_spark.operators.encode import encode_clks

@@ -2,8 +2,8 @@
 
 - Agreement estimator: empty-input guard, degenerate-corpus warning +
   graceful p25 value (not silent clamp behavior).
-- Hybrid CC: Arrow-collected vectorized driver path parity, strict
-  ``small_graph_edges=0`` contract.
+
+The hybrid connected-components tests live in test_cluster.py.
 """
 
 from __future__ import annotations
@@ -201,86 +201,3 @@ class TestIvfRound4:
         assert frac <= 0.28, frac
 
 
-class TestHybridCcRound4:
-    def test_force_distributed_contract_is_strict(self, spark):
-        """``small_graph_edges=0`` must never take the driver path, even
-        for graphs at/below any gate — the convergence-guard tests rely
-        on the literal contract."""
-        from clkhash_spark.operators.cluster import connected_components
-
-        pairs = spark.createDataFrame(
-            [("a", "b"), ("b", "c")], ["key_a", "key_b"]
-        )
-        out = {
-            (r["key"], r["cluster_id"])
-            for r in connected_components(
-                pairs, small_graph_edges=0
-            ).collect()
-        }
-        fast = {
-            (r["key"], r["cluster_id"])
-            for r in connected_components(pairs).collect()
-        }
-        assert out == fast and len(out) == 3
-
-    def test_empty_edges_with_zero_gate(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
-
-        empty = spark.createDataFrame([], "key_a string, key_b string")
-        assert connected_components(empty, small_graph_edges=0).count() == 0
-
-    def test_vectorized_union_find_shapes(self):
-        """Pure-numpy check: chain, star, two components, self-dups."""
-        import numpy as np
-
-        from clkhash_spark.operators.cluster import _union_find_labels
-
-        # chain 10-11-...-19 plus separate triangle 3-4-5
-        u = np.array(list(range(10, 19)) + [3, 4, 5])
-        v = np.array(list(range(11, 20)) + [4, 5, 3])
-        out = _union_find_labels(u, v)
-        lab = dict(zip(out["id"], out["label"]))
-        assert all(lab[i] == 10 for i in range(10, 20))
-        assert all(lab[i] == 3 for i in (3, 4, 5))
-
-    def test_vectorized_union_find_worst_case_chain_reversed(self):
-        """Descending chain (worst hooking order) still labels min."""
-        import numpy as np
-
-        from clkhash_spark.operators.cluster import _union_find_labels
-
-        n = 5000
-        u = np.arange(n, 0, -1)
-        v = np.arange(n - 1, -1, -1)
-        out = _union_find_labels(u, v)
-        assert (out["label"] == 0).all()
-
-    def test_driver_gate_plumbed_from_config(self, spark, tmp_path):
-        """cluster_driver_gate_edges=0 must force the distributed path
-        through run_linkage (observable: non-convergence raise with
-        max_iterations unreachable is too slow to test here, so assert
-        parity of outputs instead)."""
-        from clkhash_spark.pipeline import (
-            LinkageConfig,
-            run_linkage,
-            webpages_schema,
-        )
-
-        pages = synthetic_webpages(spark, 300, seed=9).select("url", "text")
-        base = dict(
-            schema=webpages_schema(), secret="s",
-            num_bands=32, bits_per_band=14,
-        )
-        r_driver = run_linkage(spark, pages, LinkageConfig(**base))
-        r_dist = run_linkage(
-            spark, pages,
-            LinkageConfig(**base, cluster_driver_gate_edges=0),
-        )
-        a = {
-            (r["url"], r["cluster_id"])
-            for r in r_driver.clusters.collect()
-        }
-        b = {
-            (r["url"], r["cluster_id"]) for r in r_dist.clusters.collect()
-        }
-        assert a == b and a

@@ -118,68 +118,6 @@ class TestWidenIfNarrow:
         assert widen_if_narrow(stream) is stream
 
 
-class TestClusterEdgeBound:
-    def test_known_edge_bound_matches_gated_path(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
-
-        pairs = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f"), ("a", "c")],
-            ["key_a", "key_b"],
-        )
-        gated = sorted(
-            map(tuple, connected_components(pairs).collect())
-        )
-        fast = sorted(
-            map(
-                tuple,
-                connected_components(pairs, known_edge_bound=5).collect(),
-            )
-        )
-        assert fast == gated and len(fast) > 0
-
-    def test_known_edge_bound_empty_edges(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
-
-        pairs = spark.createDataFrame(
-            [("x", "x")], ["key_a", "key_b"]  # self-loop only → no edges
-        )
-        out = connected_components(pairs, known_edge_bound=1)
-        assert out.count() == 0
-
-    def test_bound_above_gate_uses_gated_path(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
-
-        pairs = spark.createDataFrame(
-            [("a", "b")], ["key_a", "key_b"]
-        )
-        out = connected_components(
-            pairs, small_graph_edges=0, known_edge_bound=1
-        )
-        # bound > gate → falls through to the distributed contraction
-        assert sorted(r["cluster_id"] is not None for r in out.collect())
-
-    def test_zero_gate_never_collects_even_with_zero_bound(
-        self, spark, monkeypatch
-    ):
-        from clkhash_spark.operators.cluster import connected_components
-
-        def no_driver_collect(self):
-            raise AssertionError("small_graph_edges=0 collected edges")
-
-        pairs = spark.createDataFrame(
-            [("x", "x")], ["key_a", "key_b"]  # self-loop only → no edges
-        )
-        # the session's concrete DataFrame class (pyspark.sql.DataFrame
-        # is only its base in Spark 4)
-        monkeypatch.setattr(type(pairs), "toArrow", no_driver_collect)
-        # 0 <= bound <= gate holds, but a zero gate is strict: the
-        # distributed path runs and returns the empty components
-        out = connected_components(
-            pairs, small_graph_edges=0, known_edge_bound=0
-        )
-        assert out.count() == 0
-
-
 class TestTwoLevelFit:
     def test_distributed_subfit_bit_identical(self, spark):
         import clkhash_spark.operators.similarity as S

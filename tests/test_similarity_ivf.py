@@ -87,3 +87,30 @@ class TestIvf:
         assert r2 <= r4 + 1e-9 and r4 <= r8 + 1e-9
         assert r8 == 1.0
         assert r2 >= 0.15  # probing 1/4 of cells finds a real fraction
+
+
+class TestSingleThreadBlas:
+    """ADVICE r6: the BLAS pin must never outlive its block."""
+
+    def _fake_blas(self, monkeypatch, with_get):
+        threads = {"n": 4}
+
+        def set_fn(n):
+            threads["n"] = n
+
+        get_fn = (lambda: threads["n"]) if with_get else None
+        monkeypatch.setattr(S._single_thread_blas, "_probed", True)
+        monkeypatch.setattr(S._single_thread_blas, "_lib", (set_fn, get_fn))
+        return threads
+
+    def test_no_pin_left_without_get_symbol(self, monkeypatch):
+        threads = self._fake_blas(monkeypatch, with_get=False)
+        with S._single_thread_blas():
+            pass
+        assert threads["n"] == 4
+
+    def test_pin_inside_and_restored_with_get_symbol(self, monkeypatch):
+        threads = self._fake_blas(monkeypatch, with_get=True)
+        with S._single_thread_blas():
+            assert threads["n"] == 1
+        assert threads["n"] == 4

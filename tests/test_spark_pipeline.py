@@ -1,5 +1,6 @@
 """Spark-layer tests: encode operator parity, blocking recall, Dice
-scoring vs oracle, connected components, e2e linkage F1, resume."""
+scoring vs oracle, e2e linkage F1, resume. Clustering operators are
+tested in test_cluster.py."""
 
 import numpy as np
 import pandas as pd
@@ -11,10 +12,6 @@ from clkhash_spark.operators.blocking import (
     block_keys,
     block_size_histogram,
     cap_block_size,
-)
-from clkhash_spark.operators.cluster import (
-    attach_cluster_ids,
-    connected_components,
 )
 from clkhash_spark.operators.encode import encode_clks
 from clkhash_spark.operators.evaluate import (
@@ -194,13 +191,12 @@ class TestBlocking:
         sizes = capped.groupBy("block_key").count().collect()
         assert max(r["count"] for r in sizes) <= 25  # hash split is uneven
         assert capped.count() == 101
-        a = acct.first()
-        assert a["oversized_blocks"] == 1
-        assert a["rows_in_oversized"] == 100
+        assert acct["oversized_blocks"] == 1
+        assert acct["rows_in_oversized"] == 100
 
         dropped, acct2 = cap_block_size(blocks, 10, mode="drop")
         assert dropped.count() == 1
-        assert acct2.first()["pair_volume_affected"] == 100 * 99 / 2
+        assert acct2["pair_volume_affected"] == 100 * 99 / 2
 
     def test_histogram(self, spark):
         blocks = spark.createDataFrame(
@@ -259,60 +255,6 @@ class TestScoring:
         )
         kept = one_to_one_matching(scored).collect()
         assert {(r["key_a"], r["key_b"]) for r in kept} == {("a1", "b1")}
-
-
-class TestClustering:
-    def test_connected_components_chain_and_triangle(self, spark):
-        pairs = spark.createDataFrame(
-            [
-                ("a", "b"), ("b", "c"),              # chain a-b-c
-                ("x", "y"), ("y", "z"), ("x", "z"),  # triangle
-                ("solo1", "solo2"),
-            ],
-            ["key_a", "key_b"],
-        )
-        components = connected_components(pairs)
-        got = {
-            r["key"]: r["cluster_id"] for r in components.collect()
-        }
-        assert got["a"] == got["b"] == got["c"]
-        assert got["x"] == got["y"] == got["z"]
-        assert got["solo1"] == got["solo2"]
-        assert len({got["a"], got["x"], got["solo1"]}) == 3
-
-    def test_long_chain_converges(self, spark):
-        n = 40
-        pairs = spark.createDataFrame(
-            [(f"n{i:03d}", f"n{i+1:03d}") for i in range(n)],
-            ["key_a", "key_b"],
-        )
-        components = connected_components(pairs)
-        assert components.select("cluster_id").distinct().count() == 1
-
-    def test_very_long_chain_pointer_jumping(self, spark):
-        """A 300-node path graph must converge well inside the iteration
-        cap — pointer jumping makes rounds O(log n), not O(n)."""
-        n = 300
-        pairs = spark.createDataFrame(
-            [(f"c{i:04d}", f"c{i+1:04d}") for i in range(n)],
-            ["key_a", "key_b"],
-        )
-        components = connected_components(pairs, max_iterations=15)
-        assert components.select("cluster_id").distinct().count() == 1
-        assert components.count() == n + 1
-
-    def test_attach_cluster_ids_gives_singletons_ids(self, spark):
-        records = spark.createDataFrame(
-            [("a",), ("b",), ("lonely",)], ["url"]
-        )
-        clusters = connected_components(
-            spark.createDataFrame([("a", "b")], ["key_a", "key_b"])
-        )
-        total = attach_cluster_ids(records, clusters, key_col="url")
-        got = {r["url"]: r["cluster_id"] for r in total.collect()}
-        assert got["a"] == got["b"]
-        assert got["lonely"] is not None
-        assert got["lonely"] != got["a"]
 
 
 class TestEndToEnd:
