@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ._util import skip_unchanged_zip_rereads
+
 __all__ = [
     "band_bit_positions",
     "block_keys",
@@ -97,6 +99,7 @@ def block_keys(
 
     @F.pandas_udf(ArrayType(LongType()))
     def band_values(clk_series: pd.Series) -> pd.Series:
+        skip_unchanged_zip_rereads()
         raw = np.frombuffer(b"".join(clk_series), dtype=np.uint8)
         mat = raw.reshape(len(clk_series), -1)  # [n, l/8]
         # Gather sampled bytes for all bands at once: [n, b, r]
@@ -145,22 +148,26 @@ def cap_block_size(
     near-duplicates still collide in the other ``num_bands - 1`` bands, so
     recall degrades gracefully instead of runtime exploding.
 
-    ``accounting`` is a plain dict: blocks affected
-    (``oversized_blocks``), rows affected (``rows_in_oversized``), pairs
-    dropped (``pair_volume_affected``, an upper bound).
+    ``accounting`` is a plain dict: rows seen by the cap
+    (``input_rows``), blocks affected (``oversized_blocks``), rows
+    affected (``rows_in_oversized``), pairs dropped
+    (``pair_volume_affected``, an upper bound).
     """
     if mode not in ("drop", "split"):
         raise ValueError(f"unknown cap mode {mode!r}")
     sizes = blocks.groupBy(block_col).agg(F.count("*").alias("_block_size"))
     # Cheap pre-check: when no block exceeds the cap (the common case for
     # healthy band widths), skip the size join-back entirely — one small
-    # aggregate instead of a full re-shuffle of the block table.
-    max_size_row = sizes.agg(
-        F.max("_block_size").alias("max_size")
+    # aggregate instead of a full re-shuffle of the block table. Its row
+    # sum spares a caller that cached ``blocks`` a separate count.
+    pre = sizes.agg(
+        F.max("_block_size").alias("max_size"),
+        F.sum("_block_size").alias("rows"),
     ).first()
-    max_size = max_size_row["max_size"] or 0
-    if max_size <= max_block_size:
-        return blocks, {"oversized_blocks": 0, "rows_in_oversized": 0,
+    input_rows = pre["rows"] or 0
+    if (pre["max_size"] or 0) <= max_block_size:
+        return blocks, {"input_rows": input_rows, "oversized_blocks": 0,
+                        "rows_in_oversized": 0,
                         "pair_volume_affected": 0.0}
     annotated = blocks.join(sizes, on=block_col, how="left")
     oversized = annotated.where(F.col("_block_size") > max_block_size)
@@ -174,6 +181,7 @@ def cap_block_size(
             F.sum(F.col("size") * (F.col("size") - 1) / 2), F.lit(0.0)
         ).alias("pair_volume_affected"),
     ).first().asDict()
+    accounting = {"input_rows": input_rows, **accounting}
 
     if mode == "drop":
         capped = annotated.where(

@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 
 from ..core.kdf import generate_key_lists
 from ..core.schema import Schema
+from ._util import skip_unchanged_zip_rereads, widen_if_narrow
 
 
 def derive_keys(schema: Schema, secret: Union[str, bytes]):
@@ -101,8 +102,6 @@ def encode_clks(
     # encode to one core. The guard runs AFTER the projection, so only
     # key+feature columns shuffle (same rule as minhash_signatures /
     # simhash; see widen_if_narrow).
-    from ._util import widen_if_narrow
-
     projected = widen_if_narrow(projected)
 
     key_fields = [projected.schema[c] for c in key_cols]
@@ -120,6 +119,7 @@ def encode_clks(
     def encode_partition(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         from ..core.vectorized import BatchEncoder
 
         encoder = BatchEncoder(schema_b, keys)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..core.vectorized import _POPCOUNT_LUT
+from ._util import skip_unchanged_zip_rereads
 
 __all__ = ["candidate_pairs", "score_candidates"]
 
@@ -125,6 +126,7 @@ def score_candidates(
     ])
 
     def score_partition(batches):
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             n = len(pdf)
             if n == 0:

@@ -448,7 +448,9 @@ class _single_thread_blas:
     bit-identical to the driver loop. No-op unless both OpenBLAS
     thread-count symbols (set and get) are loadable: without the get
     symbol the prior count could not be restored, and the block would
-    leave BLAS pinned to one thread.
+    leave BLAS pinned to one thread. Probes the plain ``openblas_*``
+    names (numpy < 2's bundled build) and the ``scipy_openblas_*``
+    prefixed ones (numpy >= 2's ``scipy_openblas64`` wheel).
     """
 
     _lib = None
@@ -473,7 +475,9 @@ class _single_thread_blas:
                 for cand in libs:
                     lib = ctypes.CDLL(cand)
                     for sym in ("openblas_set_num_threads64_",
-                                "openblas_set_num_threads"):
+                                "openblas_set_num_threads",
+                                "scipy_openblas_set_num_threads64_",
+                                "scipy_openblas_set_num_threads"):
                         if hasattr(lib, sym):
                             cls._lib = (
                                 getattr(lib, sym),

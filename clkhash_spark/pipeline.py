@@ -507,10 +507,12 @@ def _resolve_banding(
 class _StageRunner:
     """Checkpoint-or-persist stage execution for the linkage graph.
 
-    A stage's ``build`` returns ``(df, persisted)``. ``persisted=True``
-    says the stage cached ``df`` itself because downstream plans rely on
-    its physical partitioning: the runner then only counts it, never
-    ``localCheckpoint``s it."""
+    A stage's ``build`` returns ``(df, persisted, rows)``.
+    ``persisted=True`` says the stage cached ``df`` itself because
+    downstream plans rely on its physical partitioning: the runner then
+    only counts it, never ``localCheckpoint``s it. ``rows`` is not None
+    when the build's own action already materialized the cached ``df``
+    and counted it: the runner then skips its count job too."""
 
     def __init__(
         self,
@@ -556,7 +558,7 @@ class _StageRunner:
     def _run_stage(
         self, name: str, fp: str, build, parents, start: float
     ) -> DataFrame:
-        df, persisted = build()
+        df, persisted, rows = build()
         if self.store is not None:
             df = self.store.write(name, df, fp)
             entry = self.store.manifest["stages"][name]
@@ -591,7 +593,8 @@ class _StageRunner:
             # same way through parquet).
             if not persisted:
                 df = df.localCheckpoint(eager=False)
-            rows = df.count()
+            if rows is None:
+                rows = df.count()
             elapsed = time.time() - start
             self.metrics[f"{name}_rows"] = rows
             self.metrics[f"{name}_seconds"] = round(elapsed, 3)
@@ -667,7 +670,7 @@ def _link(
             key_cols=(key,),
             feature_cols=config.feature_cols,
             validate=config.validate,
-        ), False)
+        ), False, None)
 
     clks = [
         runner.run(stage, _fingerprint(config, stage, fp), encode(df))
@@ -728,7 +731,7 @@ def _link(
         stage = f"kids{sides[i]}"
         kids = runner.run(
             stage, _fingerprint(config, stage, input_fps[i]),
-            lambda: (clks_i.select(key).withColumn(_KID, kid), False),
+            lambda: (clks_i.select(key).withColumn(_KID, kid), False, None),
             parents=(clk_stages[i],),
         )
         return clks_i.join(kids, on=key).persist(), kids.select(_KID, key)
@@ -784,8 +787,11 @@ def _link(
             )
             metrics["block_cap_accounting"] = accounting
             if capped is not blocks:
-                blocks = capped.persist()
-        return blocks, True
+                return capped.persist(), True, None
+            # The cap's size aggregate materialized the persisted blocks
+            # and summed their rows: no separate count job.
+            return blocks, True, accounting["input_rows"]
+        return blocks, True, None
 
     blocks = runner.run(
         "blocks", _fingerprint(config, "blocks", blocks_fp), build_blocks,
@@ -838,7 +844,7 @@ def _link(
         ))
         if one_to_one:
             scored = one_to_one_matching(scored)
-        return scored, False
+        return scored, False, None
 
     pairs = runner.run(
         "pairs", _fingerprint(config, "pairs", pairs_fp), build_pairs,
@@ -859,7 +865,7 @@ def _link(
         )
         return attach_cluster_ids(
             reduce(DataFrame.union, ids), components, key_col=_KID,
-        ).select(key, "cluster_id"), False
+        ).select(key, "cluster_id"), False, None
 
     clusters = runner.run(
         "clusters", _fingerprint(config, "clusters", pairs_fp),

@@ -84,7 +84,14 @@ def load_febrl_party(
     """Read one dirty CSV: trim every feature (the fixture pads fields
     with leading spaces), coalesce nulls to '' so the missing-value
     sentinel applies, prefix rec_id so keys are distinct across
-    parties."""
+    parties. A missing file raises ``FileNotFoundError`` naming
+    ``CLKHASH_SPARK_FEBRL_DIR`` before Spark reads anything."""
+    if not os.path.isfile(path):
+        raise FileNotFoundError(
+            f"FEBRL fixture {path!r} not found: point "
+            "CLKHASH_SPARK_FEBRL_DIR at a directory holding "
+            "dirty_1000_50_{1,2}.csv"
+        )
     df = spark.read.csv(path, header=True)
     cols = [
         F.trim(F.coalesce(F.col(c), F.lit(""))).alias(c)

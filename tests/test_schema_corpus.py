@@ -1,10 +1,13 @@
 """Run the reference's own schema-file corpus through our validator.
 
-Mirrors /root/reference/tests/test_schema.py: every file the reference
+Mirrors the reference's tests/test_schema.py: every file the reference
 accepts must load, every file it rejects must raise SchemaError — the
 cheapest proof that ``core/schema.py::validate_schema_dict`` (hand-rolled,
 not jsonschema) draws the same accept/reject boundary as the reference's
-jsonschema-based validator (clkhash/schema.py:266-333).
+jsonschema-based validator (clkhash/schema.py:266-333). The corpus is
+the reference's tests/testdata directory, the same one that holds the
+FEBRL fixture, so it resolves through ``sources.febrl.FEBRL_TESTDATA``
+(``CLKHASH_SPARK_FEBRL_DIR``).
 """
 
 import json
@@ -18,8 +21,7 @@ from clkhash_spark.core.schema import (
     from_json_file,
     from_json_str,
 )
-
-TESTDATA = "/root/reference/tests/testdata"
+from clkhash_spark.sources.febrl import FEBRL_TESTDATA as TESTDATA
 
 GOOD_FILES = [
     "good-schema-v1.json",
@@ -43,7 +45,9 @@ BAD_FILES = [
 ]
 
 corpus_exists = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference corpus not available"
+    not os.path.isdir(TESTDATA),
+    reason="reference schema corpus not available "
+    "(set CLKHASH_SPARK_FEBRL_DIR)",
 )
 
 

@@ -114,3 +114,31 @@ class TestSingleThreadBlas:
         with S._single_thread_blas():
             assert threads["n"] == 1
         assert threads["n"] == 4
+
+    @pytest.mark.parametrize("suffix", ["64_", ""])
+    def test_probe_finds_scipy_openblas_prefixed_symbols(
+        self, monkeypatch, suffix
+    ):
+        # numpy >= 2 ships scipy_openblas64, whose exports carry a
+        # scipy_ prefix; only those names exist on the fake library.
+        import ctypes
+        import glob
+
+        threads = {"n": 4}
+
+        class FakeLib:
+            pass
+
+        lib = FakeLib()
+        setattr(lib, f"scipy_openblas_set_num_threads{suffix}",
+                lambda n: threads.__setitem__("n", n))
+        setattr(lib, f"scipy_openblas_get_num_threads{suffix}",
+                lambda: threads["n"])
+        monkeypatch.setattr(glob, "glob",
+                            lambda pattern: ["libscipy_openblas64_.so"])
+        monkeypatch.setattr(ctypes, "CDLL", lambda path: lib)
+        monkeypatch.setattr(S._single_thread_blas, "_probed", False)
+        monkeypatch.setattr(S._single_thread_blas, "_lib", None)
+        with S._single_thread_blas():
+            assert threads["n"] == 1
+        assert threads["n"] == 4

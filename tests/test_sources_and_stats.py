@@ -19,6 +19,7 @@ from clkhash_spark.sources.csv import (
     read_linkage_csv,
     validity_errors,
 )
+from clkhash_spark.sources.febrl import load_febrl_party
 from clkhash_spark.sources.randomnames import (
     RANDOMNAMES_SCHEMA_DICT,
     generate_overlapping_subsets,
@@ -94,6 +95,15 @@ class TestCsvSource:
         keyed = validity_errors(df, names_schema, key_col="INDEX")
         keyed_text = "\n".join(keyed)
         assert "not-a-date" in keyed_text and "key='1'" in keyed_text
+
+
+class TestFebrlSource:
+    def test_missing_fixture_names_the_env_var(self, tmp_path):
+        # Raised before any Spark read, so no session is needed.
+        missing = os.path.join(tmp_path, "dirty_1000_50_1.csv")
+        with pytest.raises(FileNotFoundError,
+                           match="CLKHASH_SPARK_FEBRL_DIR"):
+            load_febrl_party(None, missing, "a:")
 
 
 class TestRandomNames:
